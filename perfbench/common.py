@@ -11,7 +11,8 @@ import numpy as np
 
 from tracing import Tracer
 
-#: Set-ups per run; ``setup_s`` is their median.
+#: Set-ups per run; ``setup_s`` is their median. Inputs and expected
+#: results are made once, before the first set-up and outside its timing.
 SETUP_REPEATS = 3
 #: Two halves of the timed steps whose medians differ by more than this
 #: share flag the run as drifting.
@@ -37,6 +38,9 @@ class Run:
     windows: list[tuple[float, float]] = field(default_factory=list)
     #: bytes of input each timed step read (ingest only)
     input_bytes: list[int] = field(default_factory=list)
+    #: per table layout, the spans whose Spark output is that layout's
+    #: writes (ingest only)
+    writers: dict[str, set[str]] = field(default_factory=dict)
 
     def path(self, *parts: str) -> str:
         return os.path.join(self.run_dir, *parts)

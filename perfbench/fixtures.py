@@ -198,20 +198,26 @@ def write_query_fixtures(out_dir: str, sf: float, seed: int = 42) -> dict[str, i
 
 @dataclass
 class IngestStream:
-    """The keyed event stream fed to the ingest workloads.
+    """The keyed event stream fed to the ingest workload.
 
     ``keys`` base-table keys spread evenly over ``days`` day partitions;
     each event file holds ``batch_rows`` rows, of which ``new_share`` are
     new keys and the rest updates of existing keys, all in the
     ``hot_days`` most recent days. A key may repeat within a file (the
     engine's within-batch precombine resolves it).
+
+    The defaults follow the reference job's traffic: one event file is one
+    trigger at its default 10 s window from one Kinesis shard at its
+    1,000 records/s ceiling, so 10,000 rows. The reference fixes no table
+    size; a day partition holds as many keys as one trigger brings, so the
+    copy-on-write rewrite of the hot partitions grows with the traffic.
     """
 
     seed: int
-    keys: int = 20_000
-    days: int = 20
+    keys: int = 50_000
+    days: int = 5
     hot_days: int = 3
-    batch_rows: int = 500
+    batch_rows: int = 10_000
     new_share: float = 0.05
 
     def day_names(self) -> list[str]:

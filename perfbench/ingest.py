@@ -14,17 +14,18 @@ per-layer figures.
 
 Per run:
 
-1. ``SETUP_REPEATS`` set-ups, each in fresh directories: generate the base
-   table and the event files from the seed, compute the expected table state
-   after every file with DuckDB, bootstrap both tables from the base file with
-   their ``upsert`` and start both streaming queries. ``setup_s`` is their
-   median; only the last set-up's tables go on.
-2. Warm-up: steps are run and discarded until two in a row in which MOR did
+1. Inputs, once and untimed: generate the base table and the event files
+   from the seed and compute the expected table state after every file with
+   DuckDB.
+2. ``SETUP_REPEATS`` set-ups, each in fresh directories: bootstrap both
+   tables from the base file with their ``upsert`` and start both streaming
+   queries. ``setup_s`` is their median; only the last set-up's tables go on.
+3. Warm-up: steps are run and discarded until two in a row in which MOR did
    not compact agree within ``STEADY``.
-3. Timed steps: ``seconds / STEP_NOMINAL_S`` of them, rounded to whole MOR
-   compaction cycles (five commits with the default policy), so that every
+4. Timed steps: ``seconds / STEP_NOMINAL_S`` of them, rounded up to whole
+   MOR compaction cycles (five commits with the default policy), so that every
    run does the same work and holds the same share of compacting commits.
-4. End checks on both tables: live rows and checksums against DuckDB's
+5. End checks on both tables: live rows and checksums against DuckDB's
    latest-by-ts state, and the live row count against what the generator says
    it must be.
 """
@@ -32,6 +33,7 @@ Per run:
 from __future__ import annotations
 
 import calendar
+import math
 import os
 import time
 from dataclasses import dataclass, field
@@ -53,13 +55,13 @@ from tracing import ProgressListener, TracedTable, instrument
 #: Two consecutive warm-up steps within this share of each other end the
 #: warm-up.
 STEADY = 0.15
-WARMUP_MIN, WARMUP_MAX = 4, 10
+WARMUP_MIN, WARMUP_MAX = 2, 10
 #: The tail percentile of step walls. One step in five carries a MOR
 #: compaction, so the top fifth of steps are compactions; the tail sits
 #: clear of that boundary.
 TAIL_PCT = 70.0
-#: Wall of one warm step (both layouts' commits and reads) on a 4-core
-#: host; ``seconds`` of timed work is this many steps, rounded to whole
+#: Commit wall of one warm step (both layouts) on a 4-core host;
+#: ``seconds`` of commit time is at least this many steps, in whole
 #: compaction cycles.
 STEP_NOMINAL_S = 2.0
 #: 2024-01-01 UTC in µs; ts sums are taken from here so they fit a long
@@ -193,6 +195,11 @@ class _Client:
 
 #: layout -> (table class, the operators module the per-layer names use)
 LAYOUTS = {"cow": (UpsertTable, "upsert"), "mor": (MergeOnReadTable, "mor")}
+#: Per table layout, the spans whose Spark output is that layout's writes.
+WRITERS = {
+    "cow": {"operators.upsert.upsert"},
+    "mor": {"operators.mor.upsert", "operators.mor.compact"},
+}
 
 
 @dataclass
@@ -208,16 +215,10 @@ class _Lane:
     batches: list[int] = field(default_factory=list)
 
 
-def _setup(run: Run, stream: IngestStream, n_files: int, rep: int):
-    """One set-up in fresh directories; returns the inputs and both lanes."""
+def _setup(run: Run, base: str, expected: list[dict], rep: int) -> list[_Lane]:
+    """One set-up in fresh directories: bootstrap both tables from the base
+    file and start both streaming queries."""
     rep_dir = run.path(f"rep{rep}")
-    base, files = stream.write(os.path.join(rep_dir, "inputs"), n_files)
-    expected = expected_states(base, files)
-    if run.wrong_expected:
-        # smoke test of the checks: one more row than the truth in one day
-        for state in expected:
-            day = min(state)
-            state[day] = (state[day][0] + 1, *state[day][1:])
     base_df = run.spark.read.parquet(base)
     lanes = []
     for layout, (cls, module) in LAYOUTS.items():
@@ -246,7 +247,7 @@ def _setup(run: Run, stream: IngestStream, n_files: int, rep: int):
             post_commit=client.post_commit,
         )
         lanes.append(_Lane(layout, table, client, source, pipeline, pipeline.start()))
-    return base, files, lanes
+    return lanes
 
 
 def run_ingest(run: Run) -> Result:
@@ -258,8 +259,18 @@ def run_ingest(run: Run) -> Result:
         else IngestStream(seed=run.seed)
     )
     cycle = CompactionPolicy().max_delta_commits  # the MOR table's default policy
-    steps_wanted = cycle * max(1, round(run.seconds / (cycle * STEP_NOMINAL_S)))
-    n_files = WARMUP_MAX + steps_wanted
+    steps_wanted = cycle * math.ceil(run.seconds / (cycle * STEP_NOMINAL_S))
+    start = time.perf_counter()
+    base, files = stream.write(run.path("inputs"), WARMUP_MAX + steps_wanted)
+    expected = expected_states(base, files)
+    run.notes["inputs_s"] = round(time.perf_counter() - start, 4)
+    if run.wrong_expected:
+        # smoke test of the checks: one more row than the truth in one day
+        for state in expected:
+            day = min(state)
+            state[day] = (state[day][0] + 1, *state[day][1:])
+    run.writers = WRITERS
+
     listener = ProgressListener()
     spark.streams.addListener(listener)
     setups: list[float] = []
@@ -268,7 +279,7 @@ def run_ingest(run: Run) -> Result:
         for lane in lanes:
             lane.query.stop()
         start = time.perf_counter()
-        base, files, lanes = _setup(run, stream, n_files, rep)
+        lanes = _setup(run, base, expected, rep)
         setups.append(time.perf_counter() - start)
     cow, mor = lanes
 
@@ -293,9 +304,11 @@ def run_ingest(run: Run) -> Result:
     # warm-up, discarded; steadiness is judged on steps where MOR did not compact
     warm_start = time.perf_counter()
     plain: list[float] = []
+    warm: list[float] = []
     while True:
         run.attempted += len(lanes)
         wall = step()
+        warm.append(round(wall, 4))
         if not compacted():
             plain.append(wall)
         steady = len(plain) >= WARMUP_MIN and abs(plain[-1] - plain[-2]) <= STEADY * plain[-2]
@@ -307,6 +320,7 @@ def run_ingest(run: Run) -> Result:
     input_bytes.clear()
 
     steps = 0
+    compacting: list[bool] = []
     with instrument(tracer, [lane.table for lane in lanes]):
         while steps < steps_wanted:
             tracer.step = steps
@@ -316,6 +330,7 @@ def run_ingest(run: Run) -> Result:
             except Exception as exc:  # a stream died: count it and stop
                 run.fail(f"timed step {steps} raised {exc!r}")
                 break
+            compacting.append(compacted())
             steps += 1
         tracer.step = -1
     for lane in lanes:
@@ -357,10 +372,11 @@ def run_ingest(run: Run) -> Result:
         if got[0] != generator_rows:
             run.fail(f"{lane.layout} live rows {got[0]} drift from the generator's {generator_rows}")
         layer[f"storage.{lane.layout}.table_bytes_per_row"] = tree_bytes(lane.table.path) / got[0]
-    drift_check(run, step_commit)
+    # compactions fall unevenly on the two halves; judge drift without them
+    drift_check(run, [w for w, c in zip(step_commit, compacting) if not c])
     run.notes.update(
         steps=steps,
-        warmup_steps=warmup_steps,
+        warmup_walls_s=warm,
         setups_s=[round(s, 4) for s in setups],
         commit_p50_s={k: median(v) for k, v in commit_s.items()},
     )

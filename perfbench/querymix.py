@@ -9,9 +9,10 @@ apply here: the oracle results are fixed with the data).
 
 Per run:
 
-1. ``SETUP_REPEATS`` set-ups, each in a fresh directory: write the fixtures
-   and load every table through ``readers.load_table``. ``setup_s`` is their
-   median; the last set-up's fixtures are used.
+1. Inputs, once and untimed: write the fixtures. Then ``SETUP_REPEATS``
+   set-ups, each in a fresh directory of hard links to them: load every
+   table through ``readers.load_table``. ``setup_s`` is their median; the
+   last set-up's directory is used.
 2. Warm-up, discarded: one round in which every query is checked against its
    registered DuckDB oracle SQL with ``tests/oracle_utils.compare_query``.
 3. Timed rounds: ``seconds / ROUND_NOMINAL_S`` of them (at least two). The
@@ -23,6 +24,7 @@ Per run:
 from __future__ import annotations
 
 import math
+import os
 import time
 
 from aws_glue_streaming_etl_with_apache_hudi_spark.operators.dedup import clear_persist_slots
@@ -30,10 +32,20 @@ from aws_glue_streaming_etl_with_apache_hudi_spark.queries import QUERIES
 from aws_glue_streaming_etl_with_apache_hudi_spark.sources import readers
 from common import SETUP_REPEATS, Result, Run, drift_check, median
 from fixtures import write_query_fixtures
-from metrics import QUERY_NAMES
 from oracle_utils import compare_query
 from tracing import instrument
 
+#: The round, in order.
+QUERY_NAMES = (
+    "q1_pricing_summary",
+    "q5_local_supplier_volume",
+    "asof_join_events_orders",
+    "text_tfidf_top_term",
+    "dedup_minhash_lsh",
+    "knn_bruteforce",
+    "graph_pagerank_3rounds",
+    "upsert_latest_state",
+)
 #: fixture scale factor (0.01 -> 60 k lineitem rows, 10 k events)
 SF = 0.01
 #: Wall of one warm round on a 4-core host; ``seconds`` of timed work is
@@ -61,11 +73,15 @@ def _round(run: Run, sf_dir: str) -> tuple[float, dict[str, tuple[float, float]]
 def run_query_mix(run: Run) -> Result:
     spark = run.spark
     sf = 0.001 if run.tiny else SF
+    fixtures = run.path("fixtures")
+    write_query_fixtures(fixtures, sf)
     setups = []
     for rep in range(SETUP_REPEATS):
+        sf_dir = run.path(f"rep{rep}")
+        os.makedirs(sf_dir)
+        for name in os.listdir(fixtures):
+            os.link(os.path.join(fixtures, name), os.path.join(sf_dir, name))
         start = time.perf_counter()
-        sf_dir = run.path(f"rep{rep}", "fixtures")
-        write_query_fixtures(sf_dir, sf)
         for table in readers.FIXTURE_TABLES:
             readers.load_table(spark, sf_dir, table).schema
         setups.append(time.perf_counter() - start)

@@ -19,8 +19,9 @@ The last line of standard output is one JSON object: ``correct``,
 ``attempted``, ``failed`` and ``metrics`` (name -> value and unit). With
 ``--trace 0`` the metrics are the end-to-end ones; with ``--trace 1`` the
 per-layer ones, from spans around the calls into each layer, the streaming
-progress reports and the Spark event log. Progress goes to standard error;
-the run record (host, notes, spans) goes to ``.perfbench_out/``.
+progress reports and the Spark status store. Metric names and units are read
+from ``BENCHMARK.json``. Progress goes to standard error; the run record
+(host, notes, spans) goes to ``.perfbench_out/``.
 
 ``--size tiny`` and ``--wrong-expected`` exist for ``perfbench/smoke.py``.
 """
@@ -33,8 +34,6 @@ import os
 import shutil
 import sys
 import time
-
-from metrics import END_TO_END, PER_LAYER, WRITERS
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -68,7 +67,6 @@ def _pin_environment(run_dir: str) -> dict[str, str]:
     cpus = str(min(len(os.sched_getaffinity(0)), MAX_CPUS))
     tmp = os.path.join(run_dir, "tmp")
     os.makedirs(tmp)
-    os.makedirs(os.path.join(run_dir, "eventlog"))
     os.environ.update(
         SPARK_GRAFT_CPUS=cpus,
         SPARK_GRAFT_DRIVER_MEM=DRIVER_MEM,
@@ -84,6 +82,11 @@ def _pin_environment(run_dir: str) -> dict[str, str]:
         "spark.sql.warehouse.dir": os.path.join(run_dir, "warehouse"),
         "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
         "spark.ui.showConsoleProgress": "false",
+        # the traced run reads every job and stage of the run back from the
+        # status store; keep them all, in untraced runs too, so that both
+        # run the same configuration
+        "spark.ui.retainedJobs": "100000",
+        "spark.ui.retainedStages": "100000",
     }
 
 
@@ -103,8 +106,10 @@ def _stop(spark) -> None:
 
 
 def main(argv: list[str]) -> int:
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
     parser = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    parser.add_argument("--workload", required=True, choices=("ingest", "query_mix"))
+    parser.add_argument("--workload", required=True, choices=[w["name"] for w in spec["workloads"]])
     parser.add_argument("--seed", type=int, required=True)
     parser.add_argument("--seconds", type=float, required=True)
     parser.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -119,23 +124,14 @@ def main(argv: list[str]) -> int:
     shutil.rmtree(run_dir, ignore_errors=True)
     os.makedirs(run_dir)
     try:
-        return _run(args, run_dir)
+        return _run(args, spec, run_dir)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
 
 
-def _run(args, run_dir: str) -> int:
+def _run(args, spec: dict, run_dir: str) -> int:
     host_start = _host()
     conf = _pin_environment(run_dir)
-    if args.trace:
-        conf.update(
-            {
-                "spark.eventLog.enabled": "true",
-                "spark.eventLog.dir": "file://" + os.path.join(run_dir, "eventlog"),
-                "spark.eventLog.compress": "false",
-                "spark.eventLog.rolling.enabled": "false",
-            }
-        )
     sys.path.insert(1, ROOT)
     sys.path.append(os.path.join(ROOT, "tests"))  # oracle_utils
     from aws_glue_streaming_etl_with_apache_hudi_spark import get_spark
@@ -169,29 +165,26 @@ def _run(args, run_dir: str) -> int:
             from ingest import run_ingest
 
             result = run_ingest(run)
+        layers = dict(result.per_layer)
+        if args.trace:
+            layers.update(spark_layers(spark, run.windows, run.input_bytes, run.writers))
     finally:
+        work_s = time.perf_counter() - start
         _stop(spark)
 
     host_end = _host()
     log(f"host at end {json.dumps(host_end)}")
-    log(f"notes {json.dumps(run.notes)} session_start_s {session_s:.3f}")
-    layers = dict(result.per_layer)
+    log(f"notes {json.dumps(run.notes)} session_start_s {session_s:.3f} work_s {work_s:.3f}")
+    units = {m["name"]: m["unit"] for m in spec["end_to_end"] + spec["per_layer"]}
+    per_layer = [m["name"] for m in spec["per_layer"]]
     if args.trace:
-        layers.update(
-            spark_layers(
-                os.path.join(run_dir, "eventlog"),
-                run.windows,
-                run.input_bytes,
-                WRITERS if run.input_bytes else {},
-            )
-        )
-        unknown = set(layers) - set(PER_LAYER)
+        unknown = set(layers) - set(per_layer)
         if unknown:
-            raise RuntimeError(f"per-layer metrics missing from PER_LAYER: {sorted(unknown)}")
-        layers = {name: layers.get(name, 0.0) for name in PER_LAYER}
-    if set(result.end_to_end) != set(END_TO_END):
-        raise RuntimeError(f"end-to-end metrics {sorted(result.end_to_end)} are not {sorted(END_TO_END)}")
-    units = {**{k: u for k, (u, _) in END_TO_END.items()}, **PER_LAYER}
+            raise RuntimeError(f"per-layer metrics missing from BENCHMARK.json: {sorted(unknown)}")
+        layers = {name: layers.get(name, 0.0) for name in per_layer}
+    end_to_end = {m["name"] for m in spec["end_to_end"]}
+    if set(result.end_to_end) != end_to_end:
+        raise RuntimeError(f"end-to-end metrics {sorted(result.end_to_end)} are not {sorted(end_to_end)}")
     metrics = layers if args.trace else result.end_to_end
     record = {
         "workload": args.workload,

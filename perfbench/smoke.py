@@ -8,8 +8,8 @@ and traced and checks that the last output line is the result object, that
 every end-to-end (untraced) and per-layer (traced) metric prints by name with
 its unit, and that all output checks pass. It then runs each workload once
 with ``--wrong-expected``, which falsifies one expected result, and checks
-that the run reports failed operations. It also prints the tracing overhead:
-the traced run's step median minus the untraced one's.
+that the run reports failed operations. (The tracing overhead is measured at
+full size by ``overhead.py``.)
 
 Exits 0 when every check holds.
 """
@@ -23,23 +23,23 @@ import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SECONDS = "3"
 
 
-def _run(workload: str, trace: int, *extra: str) -> dict:
+def run_benchmark(workload: str, trace: int, seed: str, seconds: str, size: str, *extra: str) -> dict:
+    """Run ``run.py`` once from the checkout root; returns its result object."""
     cmd = [
         sys.executable,
         os.path.join(HERE, "run.py"),
         "--workload",
         workload,
         "--seed",
-        "7",
+        seed,
         "--seconds",
-        SECONDS,
+        seconds,
         "--trace",
         str(trace),
         "--size",
-        "tiny",
+        size,
         *extra,
     ]
     proc = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=600)
@@ -61,9 +61,8 @@ def main() -> int:
 
     for w in bench["workloads"]:
         name = w["name"]
-        medians = {}
         for trace, key in ((0, "end_to_end"), (1, "per_layer")):
-            out = _run(name, trace)
+            out = run_benchmark(name, trace, "7", "3", "tiny")
             want = {m["name"]: m["unit"] for m in bench[key]}
             got = {k: v["unit"] for k, v in out["metrics"].items()}
             check(set(out) == {"correct", "attempted", "failed", "metrics"}, f"{name} trace={trace}: result keys")
@@ -72,10 +71,7 @@ def main() -> int:
                 out["correct"] and out["failed"] == 0 and out["attempted"] > 0,
                 f"{name} trace={trace}: {out['attempted']} operations, {out['failed']} failed",
             )
-            step = "step_p50_s" if trace == 0 else "trace.step_p50_s"
-            medians[trace] = out["metrics"].get(step, {}).get("value", 0.0)
-        print(f"      {name}: tracing overhead {medians[1] - medians[0]:+.4f} s per step")
-        out = _run(name, 0, "--wrong-expected")
+        out = run_benchmark(name, 0, "7", "3", "tiny", "--wrong-expected")
         check(
             not out["correct"] and out["failed"] > 0,
             f"{name}: a wrong expected result is reported as {out['failed']} failed operation(s)",

@@ -4,13 +4,14 @@ Spans are timed from outside the engine, around the public call into each
 layer, and kept in memory until the run ends:
 
 - ``Tracer.span`` records one span (name, start, end, parent, step) and
-  tags the Spark jobs submitted inside it with a job group, so the event log
-  can attribute executor work to the layer and the step.
+  tags the Spark jobs submitted inside it with a job group, so that their
+  executor work can be attributed to the layer and the step.
 - ``TracedTable`` delegates to a table layout and times its ``upsert``;
   ``instrument`` wraps the other public calls (``read_partitions``,
   ``compact``, ``catalog.sync_external_table``, ``readers.load_table``).
 - ``ProgressListener`` keeps the ``StreamingQueryProgress`` of every trigger.
-- ``spark_layers`` attributes the jobs of a Spark event log to the timed
+- ``spark_layers`` reads every job and stage of the run back from Spark's
+  status store at the end of the run, attributes the jobs to the timed
   steps and takes per-step medians of jobs, tasks, task time, shuffle bytes
   and output bytes.
 
@@ -24,7 +25,6 @@ from __future__ import annotations
 import contextlib
 import datetime as dt
 import functools
-import glob
 import json
 import os
 import statistics
@@ -227,53 +227,56 @@ class ProgressListener(StreamingQueryListener):
             time.sleep(0.05)
 
 
-def read_jobs(log_dir: str) -> list[dict]:
-    """Every job in the Spark event logs under ``log_dir``: submission time
+def read_jobs(spark) -> list[dict]:
+    """Every job of the session, from Spark's status store (the live record
+    the Spark UI reads, kept whether or not tracing is on): submission time
     (epoch s), the step and span of its job group (-1 and "" when it ran
-    outside any span), and its tasks' count, run time, shuffle bytes written
-    and output bytes written."""
-    jobs: dict[int, dict] = {}
-    stage_job: dict[int, int] = {}
-    for path in sorted(glob.glob(os.path.join(log_dir, "*"))):
-        with open(path) as f:
-            for line in f:
-                ev = json.loads(line)
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    group = (ev.get("Properties") or {}).get("spark.jobGroup.id") or ""
-                    step, span = -1, ""
-                    if group.startswith(_GROUP + "|"):
-                        _, s, span = group.split("|", 2)
-                        step = int(s)
-                    jobs[ev["Job ID"]] = {
-                        "time": ev.get("Submission Time", 0) / 1000.0,
-                        "step": step,
-                        "span": span,
-                        "tasks": 0,
-                        "task_s": 0.0,
-                        "shuffle_bytes": 0,
-                        "bytes_written": 0,
-                    }
-                    for sid in ev.get("Stage IDs", []):
-                        stage_job[sid] = ev["Job ID"]
-                elif kind == "SparkListenerTaskEnd":
-                    job = jobs.get(stage_job.get(ev.get("Stage ID"), -1))
-                    if job is None:
-                        continue
-                    m = ev.get("Task Metrics") or {}
-                    job["tasks"] += 1
-                    job["task_s"] += m.get("Executor Run Time", 0) / 1000.0
-                    job["shuffle_bytes"] += (m.get("Shuffle Write Metrics") or {}).get(
-                        "Shuffle Bytes Written", 0
-                    )
-                    job["bytes_written"] += (m.get("Output Metrics") or {}).get(
-                        "Bytes Written", 0
-                    )
-    return list(jobs.values())
+    outside any span), and its stages' completed tasks, task run time,
+    shuffle bytes written and output bytes written. A stage shared by
+    several jobs runs in the first of them and counts there."""
+    sc = spark.sparkContext
+    core = sc._jsc.sc()
+    core.listenerBus().waitUntilEmpty()  # the store is fed asynchronously
+    store = core.statusStore()
+    as_java = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    stages: dict[int, list[tuple]] = defaultdict(list)  # one entry per attempt
+    for s in as_java(store.stageList(None, False, False, no_quantiles, None)):
+        stages[s.stageId()].append(
+            (s.numCompleteTasks(), s.executorRunTime() / 1000.0, s.shuffleWriteBytes(), s.outputBytes())
+        )
+    jobs = []
+    counted: set[int] = set()
+    for j in sorted(as_java(store.jobsList(None)), key=lambda j: j.jobId()):
+        group = j.jobGroup().get() if j.jobGroup().isDefined() else ""
+        step, span = -1, ""
+        if group.startswith(_GROUP + "|"):
+            _, s, span = group.split("|", 2)
+            step = int(s)
+        job = {
+            "time": j.submissionTime().get().getTime() / 1000.0 if j.submissionTime().isDefined() else 0.0,
+            "step": step,
+            "span": span,
+            "tasks": 0,
+            "task_s": 0.0,
+            "shuffle_bytes": 0,
+            "bytes_written": 0,
+        }
+        for sid in as_java(j.stageIds()):
+            if sid in counted:
+                continue
+            counted.add(sid)
+            for tasks, task_s, shuffle, written in stages.get(sid, ()):
+                job["tasks"] += tasks
+                job["task_s"] += task_s
+                job["shuffle_bytes"] += shuffle
+                job["bytes_written"] += written
+        jobs.append(job)
+    return jobs
 
 
 def spark_layers(
-    log_dir: str,
+    spark,
     windows: list[tuple[float, float]],
     input_bytes: list[int],
     writers: dict[str, set[str]],
@@ -287,7 +290,7 @@ def spark_layers(
     keys = ("jobs", "tasks", "task_s", "shuffle_bytes")
     per_step = [dict.fromkeys(keys, 0) for _ in windows]
     written = {layout: [0] * len(windows) for layout in writers}
-    for job in read_jobs(log_dir):
+    for job in read_jobs(spark):
         step = job["step"]
         if step < 0:
             step = next(
