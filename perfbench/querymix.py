@@ -13,12 +13,14 @@ Per run:
    set-ups, each in a fresh directory of hard links to them: load every
    table through ``readers.load_table``. ``setup_s`` is their median; the
    last set-up's directory is used.
-2. Warm-up, discarded: one round in which every query is checked against its
-   registered DuckDB oracle SQL with ``tests/oracle_utils.compare_query``.
-3. Timed rounds: ``seconds / ROUND_NOMINAL_S`` of them (at least two). The
-   count is fixed by the work, not by the clock: rounds keep getting faster
-   for several rounds after the warm-up, so a clock-bounded run would take
-   its median from a different point of that curve on a faster host.
+2. Warm-up, discarded: ``WARMUP_ROUNDS`` rounds like the timed ones.
+3. Timed rounds: as many whole ``ROUND_NOMINAL_S`` as fit in ``seconds``, at
+   least two. The count is fixed by the work, not by the clock: rounds keep
+   getting faster for several rounds after the warm-up, so a clock-bounded
+   run would take its median from a different point of that curve on a
+   faster host.
+4. Untimed: every query is checked against its registered DuckDB oracle SQL
+   with ``tests/oracle_utils.compare_query``.
 """
 
 from __future__ import annotations
@@ -48,9 +50,12 @@ QUERY_NAMES = (
 )
 #: fixture scale factor (0.01 -> 60 k lineitem rows, 10 k events)
 SF = 0.01
+#: Untimed rounds before the timed ones. Rounds ran about a fifth slower
+#: than steady for the first two.
+WARMUP_ROUNDS = 2
 #: Wall of one warm round on a 4-core host; ``seconds`` of timed work is
 #: this many rounds, so every run times the same rounds.
-ROUND_NOMINAL_S = 6.5
+ROUND_NOMINAL_S = 7.5
 
 
 def _round(run: Run, sf_dir: str) -> tuple[float, dict[str, tuple[float, float]]]:
@@ -86,26 +91,22 @@ def run_query_mix(run: Run) -> Result:
             readers.load_table(spark, sf_dir, table).schema
         setups.append(time.perf_counter() - start)
 
-    # warm-up: the oracle check of every query
+    # warm-up, discarded
     warm_start = time.perf_counter()
-    for name in QUERY_NAMES:
+    warm: list[float] = []
+    for _ in range(WARMUP_ROUNDS):
         run.attempted += 1
-        sql = QUERIES[name].sql
-        if run.wrong_expected and name == QUERY_NAMES[0]:
-            sql = f"SELECT * FROM ({sql}) OFFSET 1"  # smoke test: drop a row
         try:
-            ok, msg = compare_query(spark, sf_dir, QUERIES[name].fn, sql)
-        except Exception as exc:  # a query that raises fails its check
-            ok, msg = False, repr(exc)
-        if not ok:
-            run.fail(f"{name} differs from its oracle: {msg}")
+            warm.append(round(_round(run, sf_dir)[0], 4))
+        except Exception as exc:  # count it; the next round starts clean
+            run.fail(f"warm-up round raised {exc!r}")
     warmup_s = time.perf_counter() - warm_start
 
     rounds: list[float] = []
     per_query: list[dict] = []
     timed_start = time.perf_counter()
     with instrument(run.tracer):
-        for step in range(max(2, round(run.seconds / ROUND_NOMINAL_S))):
+        for step in range(max(2, int(run.seconds / ROUND_NOMINAL_S))):
             run.tracer.step = step
             run.attempted += 1
             lo = time.time()
@@ -121,20 +122,33 @@ def run_query_mix(run: Run) -> Result:
     timed_s = time.perf_counter() - timed_start
     if not rounds:
         raise RuntimeError("no timed round completed")
+
+    # the oracle check of every query, untimed
+    for name in QUERY_NAMES:
+        run.attempted += 1
+        sql = QUERIES[name].sql
+        if run.wrong_expected and name == QUERY_NAMES[0]:
+            sql = f"SELECT * FROM ({sql}) OFFSET 1"  # smoke test: drop a row
+        try:
+            ok, msg = compare_query(spark, sf_dir, QUERIES[name].fn, sql)
+        except Exception as exc:  # a query that raises fails its check
+            ok, msg = False, repr(exc)
+        if not ok:
+            run.fail(f"{name} differs from its oracle: {msg}")
     drift_check(run, rounds)
-    run.notes.update(steps=len(rounds), setups_s=[round(s, 4) for s in setups])
+    run.notes.update(steps=len(rounds), warmup_walls_s=warm, setups_s=[round(s, 4) for s in setups])
 
     exec_p50 = {q: median([r[q][1] for r in per_query]) for q in QUERY_NAMES}
     e2e = {
         "setup_s": median(setups),
         "step_p50_s": median(rounds),
-        "step_tail_s": median([max(sum(t) for t in r.values()) for r in per_query]),
+        "step_tail_s": max(rounds),
         "throughput_per_s": len(rounds) * len(QUERY_NAMES) / timed_s,
         "read_p50_s": math.exp(sum(math.log(v) for v in exec_p50.values()) / len(exec_p50)),
     }
     layer = {
         "warmup_s": warmup_s,
-        "warmup_steps": 1,
+        "warmup_steps": WARMUP_ROUNDS,
     }
     if run.tracer.enabled:
         loads = run.tracer.per_step("sources.load_table")
