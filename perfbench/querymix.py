@@ -13,14 +13,14 @@ Per run:
    set-ups, each in a fresh directory of hard links to them: load every
    table through ``readers.load_table``. ``setup_s`` is their median; the
    last set-up's directory is used.
-2. Warm-up, discarded: ``WARMUP_ROUNDS`` rounds like the timed ones.
+2. Warm-up, discarded: every query is checked against its registered DuckDB
+   oracle SQL with ``tests/oracle_utils.compare_query``, then
+   ``WARMUP_ROUNDS`` rounds like the timed ones are run.
 3. Timed rounds: as many whole ``ROUND_NOMINAL_S`` as fit in ``seconds``, at
    least two. The count is fixed by the work, not by the clock: rounds keep
    getting faster for several rounds after the warm-up, so a clock-bounded
    run would take its median from a different point of that curve on a
    faster host.
-4. Untimed: every query is checked against its registered DuckDB oracle SQL
-   with ``tests/oracle_utils.compare_query``.
 """
 
 from __future__ import annotations
@@ -50,9 +50,10 @@ QUERY_NAMES = (
 )
 #: fixture scale factor (0.01 -> 60 k lineitem rows, 10 k events)
 SF = 0.01
-#: Untimed rounds before the timed ones. Rounds ran about a fifth slower
-#: than steady for the first two.
-WARMUP_ROUNDS = 2
+#: Untimed noop rounds after the oracle check. The check collects rows; the
+#: first round after it that writes to the noop sink ran up to a fifth
+#: slower than the next ones.
+WARMUP_ROUNDS = 1
 #: Wall of one warm round on a 4-core host; ``seconds`` of timed work is
 #: this many rounds, so every run times the same rounds.
 ROUND_NOMINAL_S = 7.5
@@ -91,8 +92,19 @@ def run_query_mix(run: Run) -> Result:
             readers.load_table(spark, sf_dir, table).schema
         setups.append(time.perf_counter() - start)
 
-    # warm-up, discarded
+    # warm-up, discarded: the oracle check of every query, then noop rounds
     warm_start = time.perf_counter()
+    for name in QUERY_NAMES:
+        run.attempted += 1
+        sql = QUERIES[name].sql
+        if run.wrong_expected and name == QUERY_NAMES[0]:
+            sql = f"SELECT * FROM ({sql}) OFFSET 1"  # smoke test: drop a row
+        try:
+            ok, msg = compare_query(spark, sf_dir, QUERIES[name].fn, sql)
+        except Exception as exc:  # a query that raises fails its check
+            ok, msg = False, repr(exc)
+        if not ok:
+            run.fail(f"{name} differs from its oracle: {msg}")
     warm: list[float] = []
     for _ in range(WARMUP_ROUNDS):
         run.attempted += 1
@@ -122,19 +134,6 @@ def run_query_mix(run: Run) -> Result:
     timed_s = time.perf_counter() - timed_start
     if not rounds:
         raise RuntimeError("no timed round completed")
-
-    # the oracle check of every query, untimed
-    for name in QUERY_NAMES:
-        run.attempted += 1
-        sql = QUERIES[name].sql
-        if run.wrong_expected and name == QUERY_NAMES[0]:
-            sql = f"SELECT * FROM ({sql}) OFFSET 1"  # smoke test: drop a row
-        try:
-            ok, msg = compare_query(spark, sf_dir, QUERIES[name].fn, sql)
-        except Exception as exc:  # a query that raises fails its check
-            ok, msg = False, repr(exc)
-        if not ok:
-            run.fail(f"{name} differs from its oracle: {msg}")
     drift_check(run, rounds)
     run.notes.update(steps=len(rounds), warmup_walls_s=warm, setups_s=[round(s, 4) for s in setups])
 
@@ -148,7 +147,7 @@ def run_query_mix(run: Run) -> Result:
     }
     layer = {
         "warmup_s": warmup_s,
-        "warmup_steps": WARMUP_ROUNDS,
+        "warmup_steps": 1 + WARMUP_ROUNDS,
     }
     if run.tracer.enabled:
         loads = run.tracer.per_step("sources.load_table")
