@@ -7,8 +7,6 @@ import statistics
 import sys
 from dataclasses import dataclass, field
 
-import numpy as np
-
 from tracing import Tracer
 
 #: Set-ups per run; ``setup_s`` is their median. Inputs and expected
@@ -66,10 +64,6 @@ def log(msg: str) -> None:
 
 def median(values) -> float:
     return float(statistics.median(values)) if len(values) else 0.0
-
-
-def percentile(values, pct: float) -> float:
-    return float(np.percentile(np.asarray(values, dtype=float), pct)) if len(values) else 0.0
 
 
 def drift_check(run: Run, steps: list[float]) -> None:
