@@ -42,7 +42,12 @@ from pyspark.sql import types as T
 
 from aws_glue_streaming_etl_with_apache_hudi_spark.operators.schema_evolution import evolve_schema
 from aws_glue_streaming_etl_with_apache_hudi_spark.operators.upsert import SnapshotSidecars
-from aws_glue_streaming_etl_with_apache_hudi_spark.operators.upsert import partial_combine, partial_merge, precombine_latest
+from aws_glue_streaming_etl_with_apache_hudi_spark.operators.upsert import (
+    overwrite_writer,
+    partial_combine,
+    partial_merge,
+    precombine_latest,
+)
 
 _SEQ = "_commit_seq"
 # Hudi's public per-record soft-delete field (shared contract with
@@ -343,10 +348,9 @@ class MergeOnReadTable(SnapshotSidecars):
             # retained log (the commit log is the table's full history —
             # time travel and incremental pulls replay it uniformly from
             # seq 1, tombstones included).
-            writer = _drop_tombstone_winners(batch).write.mode("overwrite")
-            if self.partition_by:
-                writer = writer.partitionBy(*self.partition_by)
-            writer.parquet(self._base)
+            overwrite_writer(
+                _drop_tombstone_winners(batch), self.partition_by
+            ).parquet(self._base)
             batch.write.mode("overwrite").parquet(
                 os.path.join(self._log, "commit=1")
             )
@@ -681,10 +685,7 @@ class MergeOnReadTable(SnapshotSidecars):
             state = self.read(as_of=commit)
             tmp_base = self._base + ".restore_tmp"
             shutil.rmtree(tmp_base, ignore_errors=True)
-            writer = state.write.mode("overwrite")
-            if self.partition_by:
-                writer = writer.partitionBy(*self.partition_by)
-            writer.parquet(tmp_base)
+            overwrite_writer(state, self.partition_by).parquet(tmp_base)
             # Swap via aside-rename, never a delete-then-rename: a crash
             # between rmtree(base) and rename(tmp, base) would leave the
             # table with NO base while meta still claims
@@ -785,11 +786,7 @@ class MergeOnReadTable(SnapshotSidecars):
         ]
         dirs = [d for d in dirs if os.path.isdir(d)]
         if not dirs:
-            fields = sorted(
-                schema_struct.fields,
-                key=lambda f: f.name in (self.partition_by or []),
-            )
-            return self.spark.createDataFrame([], T.StructType(fields))
+            return self._empty_frame()
         # read with the PERSISTED (evolved-union) schema, not footer
         # inference: after a schema-evolving delta and a PARTIAL
         # compaction the base holds files with different column sets,
@@ -1093,40 +1090,6 @@ class MergeOnReadTable(SnapshotSidecars):
         self.functional_indexes[name] = expr
         self._fidx_rebuild(touched=None)
 
-    def read_for_expr(self, name: str, value=None, between=None) -> DataFrame:
-        """Predicate on an INDEXED EXPRESSION served through the index:
-        the MERGED (real-time) view restricted to candidate partitions —
-        base directories listed for candidates only, pending deltas
-        filtered to them before the merge (a delta row from a pruned
-        partition must not merge against a missing base), then the
-        row-level residual on the expression makes the superset exact.
-        Latest view only (no as_of — time travel reads the log, whose
-        history the index does not version)."""
-        if name not in self.functional_indexes:
-            raise ValueError(f"{name!r} is not a functional index")
-        if (value is None) == (between is None):
-            raise ValueError("pass exactly one of value= / between=")
-        expr = self.functional_indexes[name]
-        lo, hi = (value, value) if between is None else between
-        parts = self._fidx_candidates(name, lo, hi)
-        if parts is None:
-            df = self.read()  # no index state / invalidated — full scan
-        elif not parts:
-            fields = sorted(
-                self._sidecar_table_schema().fields,
-                key=lambda f: f.name in (self.partition_by or []),
-            )
-            return self.spark.createDataFrame([], T.StructType(fields))
-        else:
-            df = self._read_candidate_partitions(parts)
-        e = F.expr(expr)
-        if lo is not None:
-            df = df.filter(e >= F.lit(lo))
-        if hi is not None:
-            df = df.filter(e <= F.lit(hi))
-        return df
-
-
     def _read_candidate_partitions(self, parts: list[tuple]) -> DataFrame:
         """The merged (real-time) view restricted to the given
         partitions: base directories listed for candidates only, pending
@@ -1143,29 +1106,6 @@ class MergeOnReadTable(SnapshotSidecars):
             cond = c if cond is None else (cond | c)
         base = self._read_base_partitions(parts).withColumn(_SEQ, F.lit(0))
         return self._merge_logs(base, self._log_commits()).filter(cond)
-
-    def read_where(self, where: str) -> DataFrame:
-        """`read().filter(where)` with declarative expression-index
-        pruning — the same contract as UpsertTable.read_where (Hudi 1.0:
-        a plain WHERE on an indexed expression auto-prunes), served over
-        the merged MOR view. Always exact: the full predicate re-applies
-        to the pruned superset. Latest view only."""
-        hit = self._index_bounds(where)
-        if hit is not None:
-            name, lo, hi = hit
-            parts = self._fidx_candidates(name, lo, hi)
-            if parts is not None:
-                if not parts:
-                    fields = sorted(
-                        self._sidecar_table_schema().fields,
-                        key=lambda f: f.name in (self.partition_by or []),
-                    )
-                    empty = self.spark.createDataFrame([], T.StructType(fields))
-                    return empty.filter(F.expr(where))
-                return self._read_candidate_partitions(parts).filter(
-                    F.expr(where)
-                )
-        return self.read().filter(F.expr(where))
 
     # -- compaction ----------------------------------------------------------
     def compact(
@@ -1232,12 +1172,8 @@ class MergeOnReadTable(SnapshotSidecars):
             merged = self._merge_logs(
                 base_touched.withColumn(_SEQ, F.lit(0)), commits
             )
-            (
-                _layout(merged)
-                .write.mode("overwrite")
-                .partitionBy(*self.partition_by)
-                .parquet(self._base)  # dynamic overwrite: touched parts only
-            )
+            # dynamic overwrite: touched partitions only
+            overwrite_writer(_layout(merged), self.partition_by).parquet(self._base)
         else:
             _layout(self.read()).write.mode("overwrite").parquet(self._base)
 

@@ -11,50 +11,76 @@ kept. Documented latent bugs we do NOT replicate (SURVEY.md §1.2):
 - first-run bootstrap (table absent) rode the same ``except``. Here: callers
   pass ``target=None`` (or ``UpsertTable`` handles creation explicitly).
 - same-name columns with conflicting types would fail the union at runtime.
-  Here: explicit widening rules (numeric promotion, anything-else ->
-  string), applied to BOTH sides before the union.
+  Here: Catalyst's wider type (anything without one -> string), applied to
+  BOTH sides before the union.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Numeric widening lattice: promote to the wider numeric type.
-_NUMERIC_ORDER = {
-    T.ByteType(): 0,
-    T.ShortType(): 1,
-    T.IntegerType(): 2,
-    T.LongType(): 3,
-    T.FloatType(): 4,
-    T.DoubleType(): 5,
-}
+
+# digits an integral value can need left of a decimal point
+_INTEGRAL_DIGITS = {T.ByteType: 3, T.ShortType: 5, T.IntegerType: 10, T.LongType: 20}
 
 
-def _widen(a: T.DataType, b: T.DataType) -> T.DataType:
-    """Resolve a type conflict between two columns of the same name."""
+def _decimal_shape(t: T.DataType) -> tuple[int, int]:
+    """(integer digits, scale) a value of ``t`` can need; (0, 0) for a
+    type that is neither decimal nor integral."""
+    if isinstance(t, T.DecimalType):
+        return t.precision - t.scale, t.scale
+    return _INTEGRAL_DIGITS.get(type(t), 0), 0
+
+
+def _widen(a: T.DataType, b: T.DataType, jvm) -> T.DataType:
+    """Resolve a type conflict between two columns of the same name:
+    Catalyst's own (non-ANSI) wider type — numeric promotion, DATE ->
+    TIMESTAMP(_NTZ), TIMESTAMP_NTZ -> TIMESTAMP, decimal precision and
+    scale. The ANSI variant is not used: it promotes strings to
+    numbers, which would fail a cast of any non-numeric value. STRING,
+    a lossless textual representation, is the fallback for pairs with
+    no wider type (BOOLEAN + INT, BINARY + STRING), for a decimal that
+    the 38-digit cap would cut (DECIMAL(38,0) + DECIMAL(38,10) widens
+    to DECIMAL(38,0), rounding away the scale) and when no JVM is at
+    hand."""
     if a == b:
         return a
-    if a in _NUMERIC_ORDER and b in _NUMERIC_ORDER:
-        return a if _NUMERIC_ORDER[a] >= _NUMERIC_ORDER[b] else b
-    # timestamp/date promotion
-    if {type(a), type(b)} == {T.DateType, T.TimestampType}:
-        return T.TimestampType()
-    # last resort: cast both to string (lossless textual representation)
-    return T.StringType()
+    if jvm is None:
+        return T.StringType()
+    parse = jvm.org.apache.spark.sql.types.DataType.fromJson
+    wider = jvm.org.apache.spark.sql.catalyst.analysis.TypeCoercion.findWiderTypeForTwo(
+        parse(a.json()), parse(b.json())
+    )
+    if wider.isEmpty():
+        return T.StringType()
+    w = T._parse_datatype_json_string(wider.get().json())
+    if isinstance(w, T.DecimalType):
+        digits, scale = _decimal_shape(w)
+        if any(d > digits or s > scale for d, s in map(_decimal_shape, (a, b))):
+            return T.StringType()
+    return w
 
 
-def unify_schemas(left: T.StructType, right: T.StructType) -> dict[str, T.DataType]:
+def unify_schemas(
+    left: T.StructType, right: T.StructType, jvm=None
+) -> dict[str, T.DataType]:
     """Column-name -> resolved type for the union of two schemas.
 
     Column order: left's columns first (in order), then right-only columns —
     matching ``unionByName(allowMissingColumns=True)`` output order.
+    ``jvm`` (a session's ``_jvm``) supplies Catalyst's type widening;
+    without it, the active session's is used, and with no session every
+    conflict resolves to STRING.
     """
+    if jvm is None:
+        active = SparkSession.getActiveSession()
+        jvm = active._jvm if active is not None else None
     resolved: dict[str, T.DataType] = {f.name: f.dataType for f in left.fields}
     for f in right.fields:
         if f.name in resolved:
-            resolved[f.name] = _widen(resolved[f.name], f.dataType)
+            resolved[f.name] = _widen(resolved[f.name], f.dataType, jvm)
         else:
             resolved[f.name] = f.dataType
     return resolved
@@ -86,5 +112,5 @@ def evolve_schema(batch: DataFrame, target: DataFrame | None) -> tuple[DataFrame
         return batch, None
     if batch.schema == target.schema:
         return batch, target
-    resolved = unify_schemas(batch.schema, target.schema)
+    resolved = unify_schemas(batch.schema, target.schema, batch.sparkSession._jvm)
     return conform(batch, resolved), conform(target, resolved)

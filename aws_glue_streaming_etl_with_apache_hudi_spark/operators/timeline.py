@@ -55,6 +55,7 @@ from aws_glue_streaming_etl_with_apache_hudi_spark.operators.schema_evolution im
 from aws_glue_streaming_etl_with_apache_hudi_spark.operators.upsert import (
     _hive_escape_part,
     _part_str,
+    overwrite_writer,
     precombine_latest,
 )
 
@@ -315,10 +316,9 @@ class TimelineTable:
             merged = merged.filter(
                 ~F.coalesce(F.col(DELETED_COL), F.lit(False))
             ).drop(DELETED_COL)
-        writer = merged.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(os.path.join(staging, "snapshot"))
+        overwrite_writer(merged, self.partition_by).parquet(
+            os.path.join(staging, "snapshot")
+        )
         my_schema = merged.schema
 
         with CommitLock(self.path):
@@ -739,10 +739,7 @@ class TimelineTable:
                 ~F.coalesce(F.col(DELETED_COL), F.lit(False))
             ).drop(DELETED_COL)
 
-        writer = merged.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self._snapshot_dir(commit))
+        overwrite_writer(merged, self.partition_by).parquet(self._snapshot_dir(commit))
 
         self._save_instant(
             {
@@ -1262,10 +1259,9 @@ class TimelineTable:
         state = state.persist()
         try:
             state.count()
-            writer = state.write.mode("overwrite")
-            if self.partition_by:
-                writer = writer.partitionBy(*self.partition_by)
-            writer.parquet(self._snapshot_dir(commit))
+            overwrite_writer(state, self.partition_by).parquet(
+                self._snapshot_dir(commit)
+            )
         finally:
             state.unpersist()
         # empty delta: a compaction commits no new records

@@ -446,14 +446,14 @@ def functional_index_autoprune(spark, sf_dir):
     `WHERE hour(ts) = 5` auto-prunes through a registered
     `column_stats(hour(ts))` index with no index-aware API call):
     the caller writes ordinary predicate strings against
-    `tbl.read(where=...)`; the storage layer canonicalizes each
-    conjunct through Spark's analyzer, matches it against the index's
-    canonicalized expression, prunes to candidate day partitions, and
-    re-applies the full predicate as the exactness residual. Two legs:
-    an equality probe COMPOUNDED with a non-indexed residual conjunct
-    (`value >= 10` — proving unmatched conjuncts only reduce pruning,
-    never correctness), and a `BETWEEN` range (exercising the
-    BETWEEN-aware conjunct splitter). Both must equal direct SQL over
+    `tbl.read(where=...)`; the storage layer walks the conjuncts of
+    the predicate's analyzed plan, matches their sides against the
+    index expression (`semanticEquals`), prunes to candidate day
+    partitions, and re-applies the full predicate as the exactness
+    residual. Two legs: an equality probe COMPOUNDED with a non-indexed
+    residual conjunct (`value >= 10` — proving unmatched conjuncts only
+    reduce pruning, never correctness), and a `BETWEEN` range (whose own
+    AND is no conjunct boundary). Both must equal direct SQL over
     the raw stream. File-level pruning is inputFiles-asserted in
     tests/test_functional_index.py (the IVF pattern).
 

@@ -1077,3 +1077,108 @@ def test_orc_cache_unpublished_slot_raises_not_junk(spark):
             QUERIES["orc_source_roundtrip"].fn(spark, sf).collect()
     finally:
         shutil.rmtree(slot, ignore_errors=True)
+
+
+# -- results must not depend on the session's partitionOverwriteMode ----------
+
+
+@pytest.fixture
+def static_partition_overwrite(spark):
+    """A session set up without get_spark's dynamic overwrite conf."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_cow_upsert_keeps_untouched_partitions_under_static_overwrite(
+    spark, tmp_path, static_partition_overwrite
+):
+    t = UpsertTable(
+        spark, str(tmp_path / "t"), keys=["k"], precombine="ver", partition_by=["day"]
+    )
+    schema = "k long, day string, ver long"
+    t.upsert(spark.createDataFrame([(1, "d1", 1), (2, "d2", 1), (3, "d2", 1)], schema))
+    t.upsert(spark.createDataFrame([(1, "d1", 2)], schema))  # touches d1 only
+    got = sorted((r.k, r.day, r.ver) for r in t.read().collect())
+    assert got == [(1, "d1", 2), (2, "d2", 1), (3, "d2", 1)]
+
+
+def test_mor_compaction_keeps_untouched_partitions_under_static_overwrite(
+    spark, tmp_path, static_partition_overwrite
+):
+    from aws_glue_streaming_etl_with_apache_hudi_spark.operators.mor import (
+        CompactionPolicy,
+        MergeOnReadTable,
+    )
+
+    t = MergeOnReadTable(
+        spark, str(tmp_path / "mor"), keys=["k"], precombine="ver",
+        partition_by=["day"], policy=CompactionPolicy(max_delta_commits=100),
+    )
+    schema = "k long, day string, ver long"
+    t.upsert(spark.createDataFrame([(1, "d1", 1), (2, "d1", 1), (3, "d2", 1)], schema))
+    t.upsert(spark.createDataFrame([(1, "d1", 2)], schema))  # touches d1 only
+    assert sorted(r.k for r in t.read().collect()) == [1, 2, 3]
+    t.compact()
+    assert sorted(r.k for r in t.read().collect()) == [1, 2, 3]
+    assert sorted(r.k for r in t.read_optimized().collect()) == [1, 2, 3]
+
+
+# -- schema evolution widens through Catalyst's type coercion -----------------
+
+
+def test_upsert_widens_ntz_and_decimal_pairs_not_to_string(spark, tmp_path):
+    """A stored TIMESTAMP_NTZ column plus a TIMESTAMP batch widens to
+    TIMESTAMP, and DECIMAL(10,2) plus DECIMAL(12,4) to DECIMAL(12,4), on
+    every row, including the untouched partition."""
+    from pyspark.sql import functions as F
+
+    from aws_glue_streaming_etl_with_apache_hudi_spark.operators.schema_evolution import (
+        evolve_schema,
+    )
+
+    def batch(rows, ts_type, amt_type):
+        return spark.createDataFrame(
+            rows, "k long, day string, ts string, amt string, ver long"
+        ).select(
+            "k", "day", F.col("ts").cast(ts_type).alias("ts"),
+            F.col("amt").cast(amt_type).alias("amt"), "ver",
+        )
+
+    t = UpsertTable(
+        spark, str(tmp_path / "t"), keys=["k"], precombine="ver", partition_by=["day"]
+    )
+    t.upsert(batch(
+        [(1, "d1", "2024-01-01 02:30:00", "1.25", 1),
+         (2, "d2", "2024-01-02 05:30:00", "7.50", 1)],
+        "timestamp_ntz", "decimal(10,2)",
+    ))
+    t.upsert(batch(
+        [(1, "d1", "2024-01-01 03:30:00", "1.2345", 2)], "timestamp", "decimal(12,4)"
+    ))
+    out = t.read()
+    assert dict(out.dtypes)["ts"] == "timestamp"
+    assert dict(out.dtypes)["amt"] == "decimal(12,4)"
+    got = sorted((r.k, r.ts.isoformat(), str(r.amt)) for r in out.collect())
+    assert got == [
+        (1, "2024-01-01T03:30:00", "1.2345"),
+        (2, "2024-01-02T05:30:00", "7.5000"),
+    ]
+    # Catalyst caps a decimal at 38 digits and keeps the integer part:
+    # DECIMAL(38,0) + DECIMAL(38,10) widens to DECIMAL(38,0), rounding
+    # 3.5 to 4. Such a pair falls back to STRING, which loses neither.
+    big = spark.createDataFrame([("1" + "0" * 30,)], "v string").select(
+        F.col("v").cast("decimal(38,0)").alias("v")
+    )
+    frac = spark.createDataFrame([("3.5",)], "v string").select(
+        F.col("v").cast("decimal(38,10)").alias("v")
+    )
+    a, b = evolve_schema(frac, big)
+    assert dict(a.dtypes)["v"] == dict(b.dtypes)["v"] == "string"
+    assert sorted(r.v for r in a.unionByName(b).collect()) == [
+        "1" + "0" * 30, "3.5000000000",
+    ]

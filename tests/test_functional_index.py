@@ -232,6 +232,7 @@ def test_autoprune_canonicalization_and_flipped_literal(spark, tmp_path):
         out = t.read(where=pred)
         assert _keys(out) == [1], pred
         assert all("day=d1" in f for f in out.inputFiles()), pred
+    assert t._index_bounds("5 > HOUR( ts )") == ("hour", None, 5)
 
 
 def test_autoprune_between_and_residual_conjunct(spark, tmp_path):
@@ -269,7 +270,10 @@ def test_autoprune_no_match_falls_back_exact(spark, tmp_path):
     t.upsert(_mk(spark, [(1, "d1", 2, 1), (2, "d2", 5, 1)]))
     assert _keys(t.read(where="minute(ts) = 30")) == [1, 2]
     assert _keys(t.read(where="hour(ts) <> 2")) == [2]
+    assert _keys(t.read(where="NOT hour(ts) = 2")) == [2]
     assert _keys(t.read(where="hour(ts) = k + 1")) == [1]  # k=1,hour=2
+    for pred in ("minute(ts) = 30", "hour(ts) <> 2", "NOT hour(ts) = 2", "hour(ts) = k + 1"):
+        assert t._index_bounds(pred) is None, pred
 
 
 def test_autoprune_empty_candidates_short_circuits(spark, tmp_path):
@@ -280,19 +284,34 @@ def test_autoprune_empty_candidates_short_circuits(spark, tmp_path):
     assert set(out.columns) == {"k", "day", "ts", "ver"}
 
 
-def test_conjunct_splitter_edge_cases():
-    split = UpsertTable._split_conjuncts
-    assert split("a = 1 AND b = 2") == ["a = 1", "b = 2"]
-    # BETWEEN's own AND is not a conjunct boundary
-    assert split("h BETWEEN 2 AND 5 AND k = 1") == ["h BETWEEN 2 AND 5", "k = 1"]
-    # parenthesized ORs stay intact; string literal containing ' AND '
-    assert split("(a = 1 OR b = 2) AND c = 'x AND y'") == [
-        "(a = 1 OR b = 2)", "c = 'x AND y'",
-    ]
-    # ANDs inside parens don't split
-    assert split("(a = 1 AND b = 2)") == ["(a = 1 AND b = 2)"]
-    # operand substrings ('band', 'android') are not keyword hits
-    assert split("band = 1 AND android = 2") == ["band = 1", "android = 2"]
+def test_autoprune_conjunct_edge_cases(spark, tmp_path):
+    """Conjuncts are what Spark's analyzer makes of the predicate:
+    BETWEEN's own AND is no conjunct boundary, an OR inside parens is
+    one conjunct that bounds nothing, a string literal containing
+    ' AND ' stays a literal, ANDs inside parens are still conjuncts, and
+    operand names containing `and` are plain columns."""
+    t = UpsertTable(
+        spark, str(tmp_path / "t"), keys=["k"], precombine="ver",
+        partition_by=["day"],
+        functional_indexes={"a": "a", "h": "h", "band": "band"},
+    )
+    t.upsert(spark.createDataFrame(
+        [(1, "d1", 1, 1, 2, "x AND y", 3, 1, 2),
+         (2, "d2", 1, 2, 2, "z", 9, 5, 2)],
+        "k long, day string, ver long, a long, b long, c string, h long, "
+        "band long, android long",
+    ))
+    for pred, bound in (
+        ("a = 1 AND b = 2", ("a", 1, 1)),
+        ("h BETWEEN 2 AND 5 AND k = 1", ("h", 2, 5)),
+        ("(a = 1 OR b = 2) AND c = 'x AND y'", None),
+        ("(a = 1 AND b = 2)", ("a", 1, 1)),
+        ("band = 1 AND android = 2", ("band", 1, 1)),
+    ):
+        assert t._index_bounds(pred) == bound, pred
+        got = _keys(t.read(where=pred))
+        want = _keys(t.read().filter(F.expr(pred)))
+        assert got == want == [1], pred
 
 
 # -- exactness property: autoprune == plain filter, always -------------------
@@ -312,7 +331,8 @@ def _predicates(draw):
     for _ in range(draw(st.integers(min_value=1, max_value=3))):
         kind = draw(
             st.sampled_from(
-                ["cmp", "between", "residual", "or_tail", "chained", "strlit"]
+                ["cmp", "between", "residual", "or_tail", "chained", "strlit",
+                 "backslash", "negated", "spelling", "arith"]
             )
         )
         if kind == "cmp":
@@ -341,6 +361,30 @@ def _predicates(draw):
                 )
             )
             conjs.append(f"day = '{lit}'")
+        elif kind == "backslash":
+            # backslash-escaped quotes: one literal whose inside mimics
+            # an hour conjunct (r13), always true for stored rows
+            conjs.append(
+                draw(st.sampled_from([
+                    r"day <> 'x\' AND hour(ts) = 99 AND k = \'y'",
+                    r"day <> 'it\'s'",
+                ]))
+            )
+        elif kind == "negated":
+            v = draw(_BOUND)
+            conjs.append(
+                draw(st.sampled_from([
+                    f"NOT hour(ts) = {v}", f"hour(ts) <> {v}", f"NOT (hour(ts) >= {v})",
+                ]))
+            )
+        elif kind == "spelling":
+            op, v = draw(_OPS), draw(_BOUND)
+            form = draw(st.sampled_from(["HOUR( ts ) {} {}", "hour(ts){}{}", "Hour(TS) {} {}"]))
+            conjs.append(form.format(op, v))
+        elif kind == "arith":
+            # a foldable arithmetic bound side
+            op, a, b = draw(_OPS), draw(_BOUND), draw(st.integers(0, 3))
+            conjs.append(f"hour(ts) {op} {a} - {b} + 2")
         else:
             conjs.append(f"k >= {draw(_BOUND)}")
     return " AND ".join(conjs)
@@ -367,6 +411,36 @@ def fidx_prop_table(spark, tmp_path_factory):
         (6, "d3", 7, 1), (7, "d3", 21, 1), (8, "d4", 12, 1),
     ]))
     return t
+
+
+def test_index_bounds_starts_no_spark_job(spark, tmp_path):
+    """The walk analyzes the predicate and folds its bounds in a
+    projection over a local relation: plan build only, no Spark job,
+    whatever the bound sides are."""
+    t = _tbl(spark, str(tmp_path / "t"))
+    t.upsert(_mk(spark, [(1, "d1", 2, 1), (2, "d2", 5, 1)]))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(tracker.getJobIdsForGroup(group))
+
+    def probes():
+        assert t._index_bounds("hour(ts) = 2 + 3 AND k >= 0") == ("hour", 5, 5)
+        assert t._index_bounds("hour(ts) BETWEEN 9 AND 11") == ("hour", 9, 11)
+        assert t._index_bounds(
+            "hour(ts) >= 2 AND hour(ts) <= 20 AND k >= 1 AND k < 100"
+        ) == ("hour", 2, 20)
+
+    group = f"index-bounds-{os.getpid()}-{id(t)}"
+    # the counter sees a job started under the group
+    assert len(jobs_in_group(group + "-control", lambda: spark.range(1).collect())) == 1
+    assert jobs_in_group(group, probes) == []
 
 
 # -- r13 regressions: VERDICT r12 OR-disjunct row loss + ADVICE r12 ----------
@@ -403,10 +477,10 @@ def test_autoprune_chained_comparison_exact(spark, tmp_path):
     `(hour(ts)=5) = TRUE`; splitting at the FIRST `=` would fold
     `5 = TRUE` (false) into a wrong bound. Chained comparisons must
     contribute no bound."""
-    assert UpsertTable._split_comparison("hour(ts) = 5 = TRUE") is None
-    assert UpsertTable._split_comparison("hour(ts) >= 2") == ("hour(ts)", ">=", "2")
     t = _tbl(spark, str(tmp_path / "t"))
     t.upsert(_mk(spark, [(1, "d1", 5, 1), (2, "d2", 0, 1)]))
+    assert t._index_bounds("hour(ts) = 5 = TRUE") is None
+    assert t._index_bounds("hour(ts) >= 2") == ("hour", 2, None)
     pred = "hour(ts) = 5 = TRUE"
     got = _keys(t.read(where=pred))
     want = _keys(t.read().filter(F.expr(pred)))
@@ -418,31 +492,52 @@ def test_autoprune_rejects_nondeterministic_bounds(spark, tmp_path):
     re-evaluate at scan time — never usable as pruning bounds."""
     t = _tbl(spark, str(tmp_path / "t"))
     t.upsert(_mk(spark, [(1, "d1", 2, 1), (2, "d2", 23, 1)]))
-    with pytest.raises(ValueError, match="nondeterministic"):
-        t._eval_literal("hour(current_timestamp())")
-    with pytest.raises(ValueError, match="nondeterministic"):
-        t._eval_literal("rand()")
-    # a string literal CONTAINING a denied name is still a fine literal
-    assert t._eval_literal("'rand'") == "rand"
-    pred = "hour(ts) <= hour(current_timestamp())"
-    assert t._index_bounds(pred) is None
-    got = _keys(t.read(where=pred))
-    want = _keys(t.read().filter(F.expr(pred)))
-    assert got == want
+    assert t._index_bounds("hour(ts) <= hour(current_timestamp())") is None
+    assert t._index_bounds("hour(ts) <= rand()") is None
+    # a string literal CONTAINING such a name is still a fine literal
+    assert t._index_bounds("hour(ts) = length('rand')") == ("hour", 4, 4)
+    for pred in ("hour(ts) <= hour(current_timestamp())", "hour(ts) = length('rand')"):
+        got = _keys(t.read(where=pred))
+        want = _keys(t.read().filter(F.expr(pred)))
+        assert got == want, pred
 
 
 def test_autoprune_incomparable_bound_types_fall_back(spark, tmp_path):
-    """ADVICE r12: combining bounds of incomparable Python types
-    (int vs str — Spark's implicit casts accept both) must fall back to
-    full scan + residual, not raise TypeError."""
+    """ADVICE r12: an int and a str bound on one index must not raise.
+    The analyzer compares `hour(ts) >= '25'` as BIGINT, casting the
+    index side, so that conjunct no longer matches the index and only
+    the int bound prunes (sound: the residual filter still applies)."""
     t = _tbl(spark, str(tmp_path / "t"))
     t.upsert(_mk(spark, [(1, "d1", 2, 1), (2, "d2", 5, 1)]))
     pred = "hour(ts) >= 2 AND hour(ts) >= '25'"
-    assert t._index_bounds(pred) is None  # TypeError swallowed
+    assert t._index_bounds(pred) == ("hour", 2, None)
     got = _keys(t.read(where=pred))
     want = _keys(t.read().filter(F.expr(pred)))
     assert got == want
 
+
+
+def test_autoprune_between_string_index_numeric_bounds_exact(spark, tmp_path):
+    """`date_format(ts, 'HH') BETWEEN 1 AND 5` compares the STRING index
+    as a number ('02' lies in [1, 5]); string bounds '1'..'5' would prune
+    the '02' partition ('02' < '1'). Only bounds of the index's own type
+    are taken, side by side: numeric ones give no bound, string ones
+    compare as strings in both the predicate and the pruning."""
+    t = _tbl(
+        spark, str(tmp_path / "t"), functional_indexes={"hh": "date_format(ts, 'HH')"}
+    )
+    t.upsert(_mk(spark, [(1, "d1", 2, 1), (2, "d2", 7, 1), (3, "d3", 12, 1)]))
+    for pred, bound, keys in (
+        ("date_format(ts, 'HH') BETWEEN 1 AND 5", None, [1]),
+        ("date_format(ts, 'HH') BETWEEN '0' AND 5", ("hh", "0", None), [1]),
+        ("date_format(ts, 'HH') >= 1 AND date_format(ts, 'HH') <= 5", None, [1]),
+        ("date_format(ts, 'HH') BETWEEN '01' AND '05'", ("hh", "01", "05"), [1]),
+        ("date_format(ts, 'HH') BETWEEN '1' AND '5'", ("hh", "1", "5"), [3]),
+    ):
+        assert t._index_bounds(pred) == bound, pred
+        got = _keys(t.read(where=pred))
+        want = _keys(t.read().filter(F.expr(pred)))
+        assert got == want == keys, pred
 
 # -- r13: compacted snapshot layout + soft-delete composition ----------------
 
@@ -562,7 +657,7 @@ def test_autoprune_backslash_escape_exact(spark, tmp_path):
     string literal (backslash-escaped quote) — a quote-pair scanner
     that ends the literal at `\\'` sees the literal's INSIDE at depth 0
     and extracted a bogus hour bound (confirmed silent row loss).
-    Backslash predicates disable pruning wholesale."""
+    Spark's parser reads the literal, so its inside is never a bound."""
     t = UpsertTable(
         spark, str(tmp_path / "t"), keys=["k"], precombine="ver",
         partition_by=["day"], functional_indexes={"hour": "hour(ts)"},
@@ -579,18 +674,16 @@ def test_autoprune_backslash_escape_exact(spark, tmp_path):
     got = _keys(t.read(where=pred))
     want = _keys(t.read().filter(F.expr(pred)))
     assert got == want == [1]
-    # plain backslash-free predicates still prune
+    # plain backslash-free predicates still prune, and so does a real
+    # conjunct beside a backslash-escaped literal
     assert t._index_bounds("hour(ts) = 5") is not None
+    assert t._index_bounds(r"s <> 'a\'b' AND hour(ts) = 5") == ("hour", 5, 5)
 
 
-def test_split_comparison_quote_escape_parity(spark, tmp_path):
-    """The two scanners agree on where a `''`-escaped literal ends: a
-    comparison operator INSIDE the literal is never a split point, one
-    OUTSIDE it still is."""
-    assert UpsertTable._split_comparison("s = 'it''s'") == ("s", "=", "'it''s'")
-    assert UpsertTable._split_comparison("s = 'a = b'") == ("s", "=", "'a = b'")
-    assert UpsertTable._split_comparison("'a''= b' = s") == ("'a''= b'", "=", "s")
-    # exactness end-to-end with an ''-escaped literal that CONTAINS ' AND '
+def test_autoprune_quoted_literal_exact(spark, tmp_path):
+    """A `''`-escaped literal ends where Spark's parser ends it: a
+    comparison or ' AND ' INSIDE the literal never bounds the index, a
+    conjunct OUTSIDE it still does."""
     t = UpsertTable(
         spark, str(tmp_path / "t"), keys=["k"], precombine="ver",
         partition_by=["day"], functional_indexes={"hour": "hour(ts)"},
@@ -601,11 +694,15 @@ def test_split_comparison_quote_escape_parity(spark, tmp_path):
         "k long, day string, ts string, ver long, s string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     t.upsert(rows)
-    for pred in (
-        "s = 'it''s' AND hour(ts) = 2",
-        "s = 'x AND hour(ts) = 7'",
-        "s = 'it''s AND hour(ts) = 7'",
+    for pred, bound in (
+        ("s = 'it''s'", None),
+        ("s = 'a = b'", None),
+        ("'a''= b' = s", None),
+        ("s = 'it''s' AND hour(ts) = 2", ("hour", 2, 2)),
+        ("s = 'x AND hour(ts) = 7'", None),
+        ("s = 'it''s AND hour(ts) = 7'", None),
     ):
+        assert t._index_bounds(pred) == bound, pred
         got = _keys(t.read(where=pred))
         want = _keys(t.read().filter(F.expr(pred)))
         assert got == want, pred
