@@ -30,6 +30,7 @@ Read amplification is bounded by the policy: a reader merges at most
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -369,6 +370,9 @@ class MergeOnReadTable(SnapshotSidecars):
                     ],
                 }
             )
+            # after the meta save, which is the bootstrap's commit point:
+            # a crash before it leaves an unmarked dir that fsck sweeps
+            self._publish(1, batch.schema, "__single__")
             self._fidx_absorb(batch)
             self._sync_catalog()
             return
@@ -415,10 +419,7 @@ class MergeOnReadTable(SnapshotSidecars):
         self._fidx_absorb(batch)
         # publish before metadata (the NBCC order): readers see the
         # commit via its markers even if this writer dies mid-meta
-        tmp = self._done_path(seq) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"writer": "__single__"}, f)
-        os.replace(tmp, self._done_path(seq))
+        self._publish(seq, batch.schema, "__single__")
         # metadata merge under the micro-lock (r12, ADVICE r11): the
         # unlocked save could clobber a concurrent _nbcc_complete's
         # schema-union/timeline append (lost-update on the JSON blob)
@@ -431,9 +432,11 @@ class MergeOnReadTable(SnapshotSidecars):
             )
             self._save_meta(meta)
 
-        if self.policy.due(len(self._log_commits()), self._log_bytes()):
-            self.compact()
-        self._sync_catalog()
+        # the byte walk only when the policy bounds bytes; a compaction
+        # syncs the catalog itself
+        log_bytes = self._log_bytes() if self.policy.max_log_bytes is not None else 0
+        if not (self.policy.due(len(self._log_commits()), log_bytes) and self.compact()):
+            self._sync_catalog()
 
     # -- non-blocking concurrency control (Hudi 1.0 NBCC) ---------------------
     #
@@ -495,16 +498,26 @@ class MergeOnReadTable(SnapshotSidecars):
             os.path.join(self._log, f"commit={seq}")
         )
 
-    def _nbcc_complete(self, seq: int, batch: DataFrame, writer: str) -> None:
-        """Publish: flip the instant to completed (atomic rename — readers
-        see the commit entirely or not at all), then merge the metadata
-        under the micro-lock. ``next_seq`` advances only across the
-        fully-published prefix, so it never exposes a lower unpublished
-        claim; commits published above it are visible via their markers."""
+    def _publish(self, seq: int, schema: T.StructType | None, writer: str) -> None:
+        """Flip instant ``seq`` to completed (atomic rename — readers see
+        the commit entirely or not at all). The marker records the
+        delta's schema, as a Hudi instant records its writer schema, so
+        readers scan the delta with no footer-inference job."""
+        record = {"writer": writer}
+        if schema is not None:
+            record["schema"] = schema.json()
+        os.makedirs(self._instants, exist_ok=True)
         tmp = self._done_path(seq) + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"writer": writer}, f)
+            json.dump(record, f)
         os.replace(tmp, self._done_path(seq))
+
+    def _nbcc_complete(self, seq: int, batch: DataFrame, writer: str) -> None:
+        """Publish (``_publish``), then merge the metadata under the
+        micro-lock. ``next_seq`` advances only across the fully-published
+        prefix, so it never exposes a lower unpublished claim; commits
+        published above it are visible via their markers."""
+        self._publish(seq, batch.schema, writer)
         with self._meta_lock():
             meta = self._meta()
             meta["schema"] = self._evolved_schema_json(batch)
@@ -535,10 +548,7 @@ class MergeOnReadTable(SnapshotSidecars):
             with self._meta_lock():
                 if not self.exists():
                     self.upsert(batch)  # bootstrap: base + commit 1
-                    os.makedirs(self._instants, exist_ok=True)
-                    with open(self._done_path(1) + ".tmp", "w") as f:
-                        json.dump({"writer": writer}, f)
-                    os.replace(self._done_path(1) + ".tmp", self._done_path(1))
+                    self._publish(1, self._delta_schema(1), writer)
                     return 1
         batch = _route_delete_marker(batch, self.merge_mode)
         if self.merge_mode == "partial":
@@ -807,12 +817,29 @@ class MergeOnReadTable(SnapshotSidecars):
         )
         return self.spark.read.schema(schema_struct).parquet(self._base)
 
+    def _delta_schema(self, seq: int) -> T.StructType | None:
+        """The schema recorded when delta ``seq`` was published (its own,
+        ``_deleted`` included); None for a delta published before
+        schemas were recorded. The table schema would not do: it lacks
+        ``_deleted``, and columns added by later commits."""
+        try:
+            with open(self._done_path(seq)) as f:
+                recorded = json.load(f).get("schema")
+        except FileNotFoundError:
+            return None
+        return T.StructType.fromJson(json.loads(recorded)) if recorded else None
+
+    def _read_delta(self, seq: int) -> DataFrame:
+        """Delta ``seq`` read with its recorded schema; a delta without
+        one has its schema inferred from its footer (one Spark job)."""
+        schema = self._delta_schema(seq)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(os.path.join(self._log, f"commit={seq}"))
+
     def _merge_logs(self, base: DataFrame | None, seqs: list[int]) -> DataFrame:
         merged = base
         for seq in seqs:
-            delta = self.spark.read.parquet(
-                os.path.join(self._log, f"commit={seq}")
-            ).withColumn(_SEQ, F.lit(seq))
+            delta = self._read_delta(seq).withColumn(_SEQ, F.lit(seq))
             if merged is None:
                 merged = delta
             else:
@@ -925,9 +952,7 @@ class MergeOnReadTable(SnapshotSidecars):
             )
         merged = None
         for seq in commits:
-            d = self.spark.read.parquet(
-                os.path.join(self._log, f"commit={seq}")
-            ).withColumn("_commit_id", F.lit(seq))
+            d = self._read_delta(seq).withColumn("_commit_id", F.lit(seq))
             merged = d if merged is None else merged.unionByName(
                 d, allowMissingColumns=True
             )
@@ -1157,10 +1182,11 @@ class MergeOnReadTable(SnapshotSidecars):
 
         if self.partition_by:
             # touched partitions: distinct tuples across all pending deltas
-            logs = self.spark.read.parquet(
-                *[os.path.join(self._log, f"commit={s}") for s in commits]
+            logs = functools.reduce(
+                DataFrame.unionByName,
+                [self._read_delta(s).select(*self.partition_by) for s in commits],
             )
-            touched = [tuple(r) for r in logs.select(*self.partition_by).distinct().collect()]
+            touched = [tuple(r) for r in logs.distinct().collect()]
             # O(touched) merge: read ONLY the touched base partition
             # directories (basePath-scoped — no O(table partitions)
             # listing) and fold the pending deltas onto them. The first

@@ -14,13 +14,15 @@ Reference semantics (glue_job_script.py:50-73):
 Spark-native design (no Hudi runtime):
 
 1. **Within-batch precombine** — ``max_by(struct(all columns), precombine)``
-   per key: one map-side-combinable aggregation, no window sort.
+   per key: one map-side-combinable aggregation, no window sort. On the
+   merge into an existing table it is folded into step 3's aggregation,
+   which picks the same per-key winner (``_merge_combines_batch``).
 2. **Touched-partition pruning** — collect the batch's distinct partition
    tuples (small: one row per touched partition) and read ONLY those
-   partitions of the stored table via a pushed-down filter. At 100 TB this
-   is the difference between rewriting a few partitions and scanning the
-   world — the same reason Hudi tracks file groups.
-3. **Merge** — union stored+batch, re-run the same ``max_by`` keyed
+   partitions of the stored table, with the persisted schema. At 100 TB
+   this is the difference between rewriting a few partitions and scanning
+   the world — the same reason Hudi tracks file groups.
+3. **Merge** — union stored+batch, run the same ``max_by`` keyed
    aggregation with batch rows winning ties (Hudi upserts replace stored
    rows on equal precombine).
 4. **Atomic-ish rewrite** — write merged rows with
@@ -46,7 +48,10 @@ from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aws_glue_streaming_etl_with_apache_hudi_spark.operators.schema_evolution import evolve_schema
+from aws_glue_streaming_etl_with_apache_hudi_spark.operators.schema_evolution import (
+    evolve_schema,
+    unify_schemas,
+)
 
 
 def overwrite_writer(df: DataFrame, partition_by: list[str]) -> DataFrameWriter:
@@ -148,6 +153,13 @@ def _part_str(v) -> str:
             s += ("." + f"{v.microsecond:06d}").rstrip("0")
         return s
     return str(v)
+
+
+def _partition_order(values: tuple) -> tuple:
+    """None-safe deterministic sort key for partition tuples: they can
+    mix None (null partition value) with str/int, and bare sorted()
+    raises TypeError comparing None to str."""
+    return tuple((v is None, "" if v is None else str(v)) for v in values)
 
 
 def _hive_escape_part(v) -> str:
@@ -586,15 +598,21 @@ class SnapshotSidecars:
         parts = [tuple(r) for r in keep.collect()]
         return self._sidecar_guard_parts(parts)
 
+    def _scan_schema(self) -> T.StructType:
+        """The persisted table schema, partition columns last: the shape
+        of a parquet read of the table's files."""
+        return T.StructType(
+            sorted(
+                self._sidecar_table_schema().fields,
+                key=lambda f: f.name in self.partition_by,
+            )
+        )
+
     def _empty_frame(self) -> DataFrame:
         """A row-less frame of the table schema, partition columns last
         (the column order of a parquet read), so callers see one shape
         whether or not any partition was read."""
-        fields = sorted(
-            self._sidecar_table_schema().fields,
-            key=lambda f: f.name in self.partition_by,
-        )
-        return self.spark.createDataFrame([], T.StructType(fields))
+        return self.spark.createDataFrame([], self._scan_schema())
 
     def read_for_expr(self, name: str, value=None, between=None) -> DataFrame:
         """Predicate on an INDEXED EXPRESSION served through the
@@ -851,14 +869,14 @@ class UpsertTable(SnapshotSidecars):
     def exists(self) -> bool:
         return os.path.exists(self._meta_path)
 
-    def _save_meta(self, df: DataFrame, partition_stats: dict | None = None) -> None:
+    def _save_meta(self, schema: T.StructType, partition_stats: dict | None = None) -> None:
         """Persist table schema + upsert config beside the data — the
         engine's ``.hoodie``-style commit metadata. Written atomically
         (temp + rename). Local-FS API here because tests run on local
         paths; a cluster deployment swaps in the Hadoop FileSystem API
         (same atomic-rename contract on HDFS)."""
         meta = {
-            "schema": df.schema.json(),
+            "schema": schema.json(),
             "keys": self.keys,
             "precombine": self.precombine,
             "partition_by": self.partition_by,
@@ -885,22 +903,10 @@ class UpsertTable(SnapshotSidecars):
         (see ``read_where``). Plain ``read().filter(...)`` stays exact too —
         it just can't skip files on expression predicates.
 
-        Partition-column type inference is disabled session-wide (values
-        must round-trip as written — session.py), so partition columns
-        come back as strings; cast them to their true types from the
-        persisted schema."""
+        The scan takes the persisted schema (``_read_partition_dirs``)."""
         if where is not None:
             return self.read_where(where)
-        df = self.spark.read.parquet(self.path)
-        if not self.partition_by:
-            return df
-        schema = {f.name: f.dataType for f in self._load_schema().fields}
-        return df.select(
-            *[
-                F.col(c).cast(schema[c]).alias(c) if c in self.partition_by and c in schema else F.col(c)
-                for c in df.columns
-            ]
-        )
+        return self.spark.read.schema(self._scan_schema()).parquet(self.path)
 
     def read_partitions(self, parts: list[tuple]) -> DataFrame:
         """Read ONLY the given partitions' directories (``basePath``-
@@ -1032,7 +1038,7 @@ class UpsertTable(SnapshotSidecars):
         if self.merge_mode == "partial":
             # within-batch combine under the same column-wise semantics
             batch = partial_merge(None, batch, self._identity, self.precombine)
-        else:
+        elif not self._merge_combines_batch(batch):
             batch = precombine_latest(batch, self._identity, self.precombine)
 
         if not self.exists():
@@ -1077,16 +1083,20 @@ class UpsertTable(SnapshotSidecars):
                         .distinct()
                         .collect()
                     ]
-                # None-safe deterministic order: partition tuples can mix
-                # None (null partition value) with str/int — bare sorted()
-                # raises TypeError comparing None to str.
+                touched = sorted(set(touched) | set(homes), key=_partition_order)
+            if not touched:
+                return  # a row-less batch changes nothing
+            retyped = self._retypes(batch)
+            if retyped:
+                # every partition is rewritten in the new type: the
+                # untouched ones are read with the previous persisted
+                # schema and conformed by evolve_schema below
                 touched = sorted(
-                    set(touched) | set(homes),
-                    key=lambda t: tuple(
-                        (v is None, "" if v is None else str(v)) for v in t
-                    ),
+                    set(touched)
+                    | {tuple(r) for r in self.read().select(*self.partition_by).distinct().collect()},
+                    key=_partition_order,
                 )
-            insert_parts = self._bloom_insert_parts(batch, touched)
+            insert_parts = self._bloom_insert_parts(batch, touched, retyped)
             merge_parts = [p for p in touched if p not in set(insert_parts)]
             # Touched-partition read: lists and scans ONLY the merge-path
             # partitions (bloom-proven-disjoint ones are skipped; when
@@ -1143,23 +1153,53 @@ class UpsertTable(SnapshotSidecars):
                 # stats/secondary-index/catalog refresh for the appended
                 # partitions (same re-read-from-disk contract _write uses)
                 self._save_meta(
-                    merged, self._updated_stats(merged, False, insert_parts)
+                    merged.schema, self._updated_stats(merged, False, insert_parts)
                 )
                 self._sidx_update(touched=insert_parts)
                 self._fidx_update(touched=insert_parts)
                 self._sync_catalog(touched=insert_parts)
 
-    def _bloom_insert_parts(self, batch: DataFrame, touched: list[tuple]) -> list[tuple]:
+    def _types_agree(self, batch: DataFrame) -> bool:
+        """Whether every batch column the table has is of the stored type
+        (schema evolution then casts neither side)."""
+        table = {f.name: f.dataType for f in self._load_schema().fields}
+        return all(table.get(f.name, f.dataType) == f.dataType for f in batch.schema.fields)
+
+    def _merge_combines_batch(self, batch: DataFrame) -> bool:
+        """Whether the stored merge alone may pick the batch's per-key
+        winners, with no separate batch precombine. ``_merge_batch_wins``
+        orders by (precombine, provenance, other columns), so among batch
+        rows it picks the winner ``precombine_latest`` would. That holds
+        when the merge sees the batch's own values (no cast, which could
+        reorder them) and when the batch is used nowhere else: bootstrap
+        writes it as is, the bloom path appends it and the global index
+        looks up its keys' homes."""
+        if self.global_index or self.bloom_index or not self.exists():
+            return False
+        return self._types_agree(batch)
+
+    def _retypes(self, batch: DataFrame) -> bool:
+        """Whether merging ``batch`` changes the type of a stored column
+        (schema evolution widens it)."""
+        if self._types_agree(batch):
+            return False
+        table = self._load_schema()
+        resolved = unify_schemas(batch.schema, table, self.spark._jvm)
+        return any(resolved[f.name] != f.dataType for f in table.fields)
+
+    def _bloom_insert_parts(
+        self, batch: DataFrame, touched: list[tuple], retyped: bool = False
+    ) -> list[tuple]:
         """Bloom-gate a batch: returns the touched partitions eligible
         for the insert fast path, and accumulates the batch's key bits
         into the touched shards FIRST (crash between the save and the
         data writes leaves only false positives — replay takes the
         merge path and stays idempotent). Accumulation happens on EVERY
-        path through here — in particular for additive-schema batches,
-        which fall back to the merge path wholesale (their rewrite
-        realigns files) but still ADD keys: skipping them would break
-        the superset invariant and let a later upsert of the same keys
-        take the fast path and duplicate rows."""
+        path through here — in particular for additive-schema and
+        retyping batches, which fall back to the merge path wholesale
+        (their rewrite realigns files) but still ADD keys: skipping them
+        would break the superset invariant and let a later upsert of the
+        same keys take the fast path and duplicate rows."""
         if not (self.bloom_index and self.partition_by):
             return []
         blooms = self._bloom_load(touched)
@@ -1167,6 +1207,7 @@ class UpsertTable(SnapshotSidecars):
         if (
             not self.global_index
             and self.merge_mode == "overwrite"
+            and not retyped
             and set(batch.columns) <= {f.name for f in self._load_schema().fields}
         ):
             fast = self._bloom_probe_and_accumulate(batch, touched, blooms)
@@ -1312,12 +1353,7 @@ class UpsertTable(SnapshotSidecars):
                         .distinct()
                         .collect()
                     ]
-                touched = sorted(
-                    set(touched) | set(homes),
-                    key=lambda t: tuple(
-                        (v is None, "" if v is None else str(v)) for v in t
-                    ),
-                )
+                touched = sorted(set(touched) | set(homes), key=_partition_order)
             # touched-partition read: O(touched) listing, never O(table)
             stored = self.read_partitions(touched)
         else:
@@ -1993,8 +2029,16 @@ class UpsertTable(SnapshotSidecars):
     ) -> None:
         # only partitions present in `df` are replaced — the COW
         # "rewrite touched file groups" behavior
+        schema = df.schema
+        if self.partition_by and not overwrite_all and self.exists():
+            # the untouched partitions keep their columns, so the schema
+            # that reads scan with keeps them too
+            names = set(schema.fieldNames())
+            schema = T.StructType(
+                schema.fields + [f for f in self._load_schema().fields if f.name not in names]
+            )
         overwrite_writer(df, self.partition_by).parquet(self.path)
-        self._save_meta(df, self._updated_stats(df, overwrite_all, touched))
+        self._save_meta(schema, self._updated_stats(df, overwrite_all, touched))
         self._sidx_update(touched=None if overwrite_all else touched)
         self._fidx_update(touched=None if overwrite_all else touched)
         self._sync_catalog(touched=None if overwrite_all else touched)
@@ -2794,7 +2838,17 @@ class UpsertTable(SnapshotSidecars):
         """Read ONLY the given partition directories (tuples of partition
         values or string tokens) — pruned partitions are never listed,
         let alone scanned (``inputFiles()`` shows exactly the kept
-        paths). Partition columns are cast back per the table schema."""
+        paths).
+
+        The scan takes the PERSISTED schema, as MOR's base reads do: no
+        footer-inference job, and partition-directory tokens are typed
+        directly (partition-column type inference is off session-wide —
+        session.py). Inference read ONE footer, so a column that only
+        some partitions' files carry vanished from the read, and a commit
+        then rewrote the table without it. Every file conforms to the
+        persisted schema, or is null-filled for columns it predates: a
+        commit that changes a column's type rewrites every partition
+        (see ``upsert``)."""
         dirs = [
             os.path.join(
                 self.path,
@@ -2810,15 +2864,10 @@ class UpsertTable(SnapshotSidecars):
             # never a full read() whose filter(False) would still pay
             # the O(table) listing
             return self._empty_frame()
-        raw = self.spark.read.option("basePath", self.path).parquet(*dirs)
-        schema = {f.name: f.dataType for f in self._load_schema().fields}
-        return raw.select(
-            *[
-                F.col(c).cast(schema[c]).alias(c)
-                if c in self.partition_by and c in schema
-                else F.col(c)
-                for c in raw.columns
-            ]
+        return (
+            self.spark.read.schema(self._scan_schema())
+            .option("basePath", self.path)
+            .parquet(*dirs)
         )
 
     _read_candidate_partitions = _read_partition_dirs  # SnapshotSidecars hook

@@ -7,10 +7,18 @@ Reference (glue_job_script.py):
                                          kafka/kinesis in production)
 - A2  forEachBatch trigger    :111-118 -> ``writeStream.foreachBatch(...)
                                          .trigger(...)``
-- A3  empty-batch guard       :98     -> ``df.isEmpty()`` (the reference's
-                                         ``count() > 0`` materializes every
-                                         batch twice — known anti-pattern,
-                                         SURVEY.md §4)
+- A3  empty-batch guard       :98     -> none: with a processing-time
+                                         trigger and no stateful operator,
+                                         Spark calls ``foreachBatch`` only
+                                         when the source has new data, so
+                                         the reference's ``count() > 0``
+                                         (a second pass over every batch,
+                                         SURVEY.md §4) is a job per trigger
+                                         that never skips. A 0-row file
+                                         still arrives: the COW upsert
+                                         returns early, MOR writes an
+                                         empty delta (as Hudi's default
+                                         ``hoodie.allow.empty.commit``)
 - A7  schema evolution        :81-94  -> handled inside ``UpsertTable``
 - A8-A11 Hudi upsert + sync   :50-73  -> ``UpsertTable.upsert``
 - A12 checkpoint/bookmark     :116    -> ``checkpointLocation``
@@ -104,8 +112,6 @@ class StreamingUpsertPipeline:
         ``transform`` is the per-batch derivation hook (type coercion,
         partition-column derivation, enrichment) applied before the
         upsert."""
-        if batch_df.isEmpty():  # A3, without the double materialization
-            return
         self.batches_seen.append(batch_id)
         if self.quarantine_dir is not None:
             from aws_glue_streaming_etl_with_apache_hudi_spark.sources.quarantine import CORRUPT_COL

@@ -534,3 +534,134 @@ def test_evolved_column_survives_partial_compaction(table, spark):
     table.compact()
     row = {r.k: (r.extra, r.extra2) for r in table.read().collect()}
     assert row == {1: (None, None), 2: ("kept", None), 3: ("e3", 7)}
+
+
+# -- recorded delta schemas ----------------------------------------------------
+
+
+def _forget_recorded_schemas(path):
+    """Rewrite every completed marker without its schema: the table as a
+    writer that did not record delta schemas left it."""
+    import json
+
+    inst = os.path.join(path, "log", "_instants")
+    for name in os.listdir(inst):
+        if name.endswith(".completed"):
+            p = os.path.join(inst, name)
+            with open(p) as f:
+                rec = json.load(f)
+            rec.pop("schema", None)
+            with open(p, "w") as f:
+                json.dump(rec, f)
+
+
+def _view(df):
+    return df.dtypes, sorted(tuple(r) for r in df.collect())
+
+
+def _history_views(t, as_of, base=True):
+    views = {
+        "as_of": _view(t.read(as_of=as_of)),
+        "incremental": _view(t.read_incremental(0)),
+    }
+    if base:
+        views["read"] = _view(t.read())
+        views["read_optimized"] = _view(t.read_optimized())
+    return views
+
+
+def _assert_recorded_matches_inferred(spark, tmp_path, batches, base_after_compaction=True):
+    """Commit ``batches``, then read, compact and pull incrementally twice:
+    with the recorded delta schemas, and on a copy whose markers carry
+    none (every delta's schema inferred from its footer). Both must see
+    the same columns, types and rows. ``base_after_compaction=False``
+    skips the base reads after the compaction."""
+    import shutil
+
+    def mk(path):
+        return MergeOnReadTable(
+            spark=spark, path=str(path), keys=["k"], precombine="ver",
+            partition_by=["part"], policy=CompactionPolicy(max_delta_commits=100),
+        )
+
+    rec = mk(tmp_path / "recorded")
+    for b in batches:
+        rec.upsert(b)
+    shutil.copytree(rec.path, str(tmp_path / "inferred"))
+    inf = mk(tmp_path / "inferred")
+    _forget_recorded_schemas(inf.path)
+    assert rec._delta_schema(2) is not None and inf._delta_schema(2) is None
+    as_of = len(batches) - 1
+    assert _history_views(rec, as_of) == _history_views(inf, as_of)
+    assert rec.compact() == inf.compact() == len(batches) - 1
+    # as_of now predates the compaction: a replay of the log alone
+    assert _history_views(rec, as_of, base_after_compaction) == _history_views(
+        inf, as_of, base_after_compaction
+    )
+    return rec
+
+
+def test_recorded_schema_tombstone_delta(spark, tmp_path):
+    """A tombstone delta carries ``_deleted``, which the table schema
+    lacks: it is read with its own recorded schema."""
+    marked = "k long, part string, v string, ver long, _hoodie_is_deleted boolean"
+    rec = _assert_recorded_matches_inferred(spark, tmp_path, [
+        _rows(spark, [(1, "a", "x", 1), (2, "a", "y", 1), (3, "b", "z", 1)]),
+        spark.createDataFrame([(2, "a", None, 2, True), (3, "b", "z2", 2, False)], marked),
+        _rows(spark, [(4, "b", "w", 1)]),
+    ])
+    assert "_deleted" in rec._delta_schema(2).fieldNames()
+    assert sorted(r.k for r in rec.read().collect()) == [1, 3, 4]
+
+
+def test_recorded_schema_delta_adds_a_column(spark, tmp_path):
+    rec = _assert_recorded_matches_inferred(spark, tmp_path, [
+        _rows(spark, [(1, "a", "x", 1), (2, "b", "y", 1)]),
+        spark.createDataFrame([Row(k=1, part="a", v="x2", ver=2, extra="new")]),
+        _rows(spark, [(2, "b", "y2", 2)]),
+    ])
+    assert {(r.k, r.extra) for r in rec.read().collect()} == {(1, "new"), (2, None)}
+
+
+def test_recorded_schema_delta_widens_a_type(spark, tmp_path):
+    """The delta is read in its own (wider) type and the merge widens
+    the base. The base is not read after the compaction: the persisted
+    table schema keeps the first type of a column, which the compacted
+    base no longer has, with or without recorded schemas."""
+    schema = "k long, part string, v {}, ver long"
+    batches = [
+        spark.createDataFrame([(1, "a", 1, 1), (2, "b", 2, 1)], schema.format("int")),
+        spark.createDataFrame([(1, "a", 2**40, 2)], schema.format("bigint")),
+        spark.createDataFrame([(2, "b", 3, 2)], schema.format("int")),
+    ]
+    rec = _assert_recorded_matches_inferred(
+        spark, tmp_path, batches, base_after_compaction=False
+    )
+    assert rec._delta_schema(2)["v"].dataType.typeName() == "long"
+    assert {(r.k, r.v) for r in rec.read_incremental(1).collect()} == {(1, 2**40), (2, 3)}
+
+
+def test_recorded_schema_reads_start_no_spark_job(spark, tmp_path):
+    """Building the realtime view over pending deltas with recorded
+    schemas starts no Spark job; a table whose markers carry none infers
+    each delta's schema (one job per delta)."""
+    t = MergeOnReadTable(
+        spark=spark, path=str(tmp_path / "m"), keys=["k"], precombine="ver",
+        partition_by=["part"], policy=CompactionPolicy(max_delta_commits=100),
+    )
+    for ver in (1, 2, 3):
+        t.upsert(_rows(spark, [(1, "a", f"x{ver}", ver), (ver, "b", "y", ver)]))
+    sc = spark.sparkContext
+
+    def jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            t.read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    group = f"mor-recorded-{os.getpid()}-{abs(hash(str(tmp_path)))}"
+    assert jobs(group) == 0
+    _forget_recorded_schemas(t.path)
+    assert jobs(group + "-inferred") == 2
