@@ -41,7 +41,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aws_glue_streaming_etl_with_apache_hudi_spark.operators.schema_evolution import evolve_schema
+from aws_glue_streaming_etl_with_apache_hudi_spark.operators.schema_evolution import (
+    conform,
+    evolve_schema,
+    unify_schemas,
+)
 from aws_glue_streaming_etl_with_apache_hudi_spark.operators.upsert import SnapshotSidecars
 from aws_glue_streaming_etl_with_apache_hudi_spark.operators.upsert import (
     overwrite_writer,
@@ -426,7 +430,7 @@ class MergeOnReadTable(SnapshotSidecars):
         with self._meta_lock():
             meta = self._meta()
             meta["next_seq"] = max(meta["next_seq"], seq + 1)
-            meta["schema"] = self._evolved_schema_json(batch)
+            self._evolve_meta(meta, batch)
             meta.setdefault("timeline", []).append(
                 {"seq": seq, "action": "deltacommit"}
             )
@@ -520,7 +524,7 @@ class MergeOnReadTable(SnapshotSidecars):
         self._publish(seq, batch.schema, writer)
         with self._meta_lock():
             meta = self._meta()
-            meta["schema"] = self._evolved_schema_json(batch)
+            self._evolve_meta(meta, batch)
             meta.setdefault("timeline", []).append(
                 # append order = COMPLETION order (Hudi 1.0's completion-
                 # time semantics); seq records the claim order
@@ -693,6 +697,9 @@ class MergeOnReadTable(SnapshotSidecars):
             # base, and writing in place would race the plan still reading
             # the old base files
             state = self.read(as_of=commit)
+            # in the table's types: the restored base is read with them
+            table = self._sidecar_table_schema()
+            state = conform(state, {c: table[c].dataType for c in state.columns})
             tmp_base = self._base + ".restore_tmp"
             shutil.rmtree(tmp_base, ignore_errors=True)
             overwrite_writer(state, self.partition_by).parquet(tmp_base)
@@ -735,6 +742,8 @@ class MergeOnReadTable(SnapshotSidecars):
         meta["next_seq"] = commit + 1
         if rebuild or meta.get("compacted_through", 0) > commit:
             meta["compacted_through"] = commit
+        if rebuild:
+            meta.pop("base_types", None)  # the base was rewritten whole
         # drop the rolled-back instants' timeline entries: their seq
         # numbers are reused by future commits, and ghost entries would
         # make history() report dropped commits (and later, duplicates).
@@ -757,21 +766,37 @@ class MergeOnReadTable(SnapshotSidecars):
         for name in self.functional_indexes:
             self._fidx_invalidate(name)
 
-    def _evolved_schema_json(self, batch: DataFrame) -> str:
+    def _evolve_meta(self, meta: dict, batch: DataFrame) -> None:
+        """Fold ``batch``'s schema into the persisted table schema: new
+        columns append, and a stored column takes the wider of its two
+        types (Catalyst's widening, ``unify_schemas``). Base files keep
+        the type they were written in until a compaction rewrites them,
+        so a column whose type changes records its base type under
+        ``base_types`` (the first one: the oldest base files hold it)."""
         # `_deleted` is delta-file-internal (tombstone routing): it must
         # never reach the persisted meta schema, or schema-driven empty
         # frames would expose a column the merged read paths drop.
-        stored = T.StructType.fromJson(json.loads(self._meta()["schema"]))
-        names = {f.name for f in stored.fields}
-        merged = T.StructType(
-            list(stored.fields)
-            + [
-                f
-                for f in batch.schema.fields
-                if f.name not in names and f.name != _DELETED
-            ]
-        )
-        return merged.json()
+        stored = T.StructType.fromJson(json.loads(meta["schema"]))
+        incoming = T.StructType([f for f in batch.schema.fields if f.name != _DELETED])
+        resolved = unify_schemas(stored, incoming, self.spark._jvm)
+        base_types = {f.name: f for f in self._base_types(meta)}
+        for f in stored.fields:
+            if resolved[f.name] != f.dataType:
+                base_types.setdefault(f.name, f)
+        names = set(stored.fieldNames())
+        meta["schema"] = T.StructType(
+            [T.StructField(f.name, resolved[f.name], f.nullable, f.metadata) for f in stored.fields]
+            + [f for f in incoming.fields if f.name not in names]
+        ).json()
+        if base_types:
+            meta["base_types"] = T.StructType(list(base_types.values())).json()
+
+    @staticmethod
+    def _base_types(meta: dict) -> list[T.StructField]:
+        """Columns the base still stores in an older type than the table
+        schema's, each with that type."""
+        recorded = meta.get("base_types")
+        return T.StructType.fromJson(json.loads(recorded)).fields if recorded else []
 
     # -- read path ----------------------------------------------------------
     def _read_base_partitions(self, parts: list[tuple]) -> DataFrame:
@@ -783,7 +808,6 @@ class MergeOnReadTable(SnapshotSidecars):
         empty frame with the table schema returns."""
         from aws_glue_streaming_etl_with_apache_hudi_spark.operators.upsert import _hive_escape_part
 
-        schema_struct = T.StructType.fromJson(json.loads(self._meta()["schema"]))
         dirs = [
             os.path.join(
                 self._base,
@@ -797,25 +821,37 @@ class MergeOnReadTable(SnapshotSidecars):
         dirs = [d for d in dirs if os.path.isdir(d)]
         if not dirs:
             return self._empty_frame()
-        # read with the PERSISTED (evolved-union) schema, not footer
-        # inference: after a schema-evolving delta and a PARTIAL
-        # compaction the base holds files with different column sets,
-        # and single-footer inference silently DROPPED the evolved
-        # columns' stored values (r13 repro: an int column written by
-        # the compacted partition vanished from read()). The explicit
-        # schema null-fills files that predate a column and types
-        # partition-dir tokens directly.
-        return self.spark.read.schema(schema_struct).option(
-            "basePath", self._base
-        ).parquet(*dirs)
+        return self._read_base(dirs)
 
-    def _read_base(self) -> DataFrame:
-        # persisted-schema read — see _read_base_partitions for why
-        # footer inference loses evolved columns on heterogeneous bases
-        schema_struct = T.StructType.fromJson(
-            json.loads(self._meta()["schema"])
+    def _read_base(self, dirs: list[str] | None = None) -> DataFrame:
+        """The base (or the given partition directories of it) read with
+        the PERSISTED (evolved-union) schema, not footer inference: after
+        a schema-evolving delta and a PARTIAL compaction the base holds
+        files with different column sets, and single-footer inference
+        silently DROPPED the evolved columns' stored values (r13 repro:
+        an int column written by the compacted partition vanished from
+        read()). The explicit schema null-fills files that predate a
+        column and types partition-dir tokens directly. A column whose
+        type changed since the base was written is read in its base type
+        and cast to the table's."""
+        meta = self._meta()
+        table = T.StructType.fromJson(json.loads(meta["schema"]))
+        written = {f.name: f.dataType for f in self._base_types(meta)}
+        reader = self.spark.read.schema(
+            T.StructType(
+                [
+                    T.StructField(f.name, written.get(f.name, f.dataType), f.nullable, f.metadata)
+                    for f in table.fields
+                ]
+            )
         )
-        return self.spark.read.schema(schema_struct).parquet(self._base)
+        if dirs is None:
+            df = reader.parquet(self._base)
+        else:
+            df = reader.option("basePath", self._base).parquet(*dirs)
+        if not written:
+            return df
+        return conform(df, {c: table[c].dataType for c in df.columns})
 
     def _delta_schema(self, seq: int) -> T.StructType | None:
         """The schema recorded when delta ``seq`` was published (its own,
@@ -837,6 +873,15 @@ class MergeOnReadTable(SnapshotSidecars):
         return reader.parquet(os.path.join(self._log, f"commit={seq}"))
 
     def _merge_logs(self, base: DataFrame | None, seqs: list[int]) -> DataFrame:
+        if base is not None and not seqs:
+            # Bootstrap, compaction and restore all write merged output,
+            # so the base holds one tombstone-free row per identity: with
+            # no delta pending it IS the state, and the keyed aggregation
+            # would only shuffle it. Columns keep the merged read's order.
+            base = base.drop(_SEQ)
+            if self.merge_mode == "partial":
+                base = base.select(*self._identity, *[c for c in base.columns if c not in self._identity])
+            return base
         merged = base
         for seq in seqs:
             delta = self._read_delta(seq).withColumn(_SEQ, F.lit(seq))
@@ -1167,6 +1212,7 @@ class MergeOnReadTable(SnapshotSidecars):
             commits = [c for c in commits if c < min(inflight)]
         if not commits:
             return 0
+        retyped = bool(self._base_types(self._meta()))
 
         def _layout(df: DataFrame) -> DataFrame:
             if not zorder_by:
@@ -1187,6 +1233,13 @@ class MergeOnReadTable(SnapshotSidecars):
                 [self._read_delta(s).select(*self.partition_by) for s in commits],
             )
             touched = [tuple(r) for r in logs.distinct().collect()]
+            if retyped:
+                # a column changed type since the base was written: every
+                # base partition is rewritten in the table's types (the
+                # COW `_retypes` rule), so no file keeps a type the
+                # parquet reader might not read as the new one
+                stored = self._read_base().select(*self.partition_by).distinct().collect()
+                touched = list(dict.fromkeys(touched + [tuple(r) for r in stored]))
             # O(touched) merge: read ONLY the touched base partition
             # directories (basePath-scoped — no O(table partitions)
             # listing) and fold the pending deltas onto them. The first
@@ -1205,6 +1258,8 @@ class MergeOnReadTable(SnapshotSidecars):
 
         meta = self._meta()
         meta["compacted_through"] = max(commits)
+        if retyped:
+            meta.pop("base_types", None)  # every base partition was rewritten
         meta.setdefault("timeline", []).append(
             {"seq": max(commits), "action": "compaction", "through": max(commits)}
         )

@@ -23,6 +23,18 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of the
+    host's physical memory, capped at 48g, so the heap never outgrows the
+    host it runs on (48g on a 16 GB host let a long test session's JVM
+    grow until a second one beside it died)."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):  # no sysconf names on this platform
+        return "48g"
+    return f"{min(48 << 10, total >> 21)}m"
+
+
 def get_spark(
     app_name: str = "aws-glue-streaming-etl-hudi-spark",
     master: str | None = None,
@@ -74,7 +86,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_SPLIT", "4m"))
         .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         # Spark 4 captures the Python call site (a full inspect.stack walk
         # through a py4j roundtrip) on EVERY DataFrame/Column API call for
         # error decoration — ~3 ms per call, which is ~50% of the whole

@@ -11,10 +11,20 @@ predicate pushdown, column pruning and partition pruning; a scan only
 materializes the columns/row-groups a query needs, which is the property that
 matters at 100 TB (verify with ``plans.explain_str``: ``PushedFilters`` /
 ``ReadSchema``).
+
+A parquet table opens from metadata alone, as the reference learns a table's
+schema from the catalog and never scans data for it (glue_job_script.py:85):
+the driver reads the file's footer and converts it with Spark's own footer
+conversion, so opening a table starts no Spark job.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import weakref
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,30 +57,53 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """Spark schema of the single parquet file at ``path``, read on the
+    driver: parquet-mr reads the footer and Spark's own
+    ``ParquetFileFormat.readSchemaFromFooter`` converts it, the conversion
+    Spark's schema-inference job runs, so the footer's Spark schema
+    metadata and session flags such as ``nanosAsLong`` apply alike. None
+    for a directory (or anything else that is not a local file) and for
+    any error from those JVM classes; the caller then lets Spark infer."""
+    if not os.path.isfile(path):
+        return None
+    jvm = spark._jvm
+    try:
+        state = spark._jsparkSession.sessionState()
+        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(state.newHadoopConf(), jpath)
+        parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+        schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(jpath, footer),
+            parquet.ParquetToSparkSchemaConverter(state.conf()),
+        ).asNullable().json()
+    except (Py4JError, TypeError):  # TypeError: a class missing from the JVM
+        return None
+    return T.StructType.fromJson(json.loads(schema))
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Parquet batch read. A single file opens with its footer schema read
+    on the driver (no Spark job); a directory, or a file whose footer the
+    driver cannot convert, is inferred by Spark, which raises its own
+    error for a file that is not parquet."""
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 # Reader memo for fixture tables: (session, path identity) -> DataFrame.
-# ``spark.read.parquet`` with no schema runs a footer-sampling JOB at plan
-# time (visible as a 1-task "parquet at" job); repeated plan builds pay it
-# per table per call — 3-6 serial ~40-90 ms jobs for the multi-table TPC-H
-# queries. At 100 TB the same inference samples MANY footers (guide §6).
-# The memo stores the immutable source DataFrame itself: a hit costs zero
-# Spark jobs AND zero py4j gateway roundtrips (a schema-only memo still
-# paid ~11 roundtrips per read rebuilding the reader). Keyed on (realpath,
-# mtime_ns, size) so a rewritten fixture re-reads, and weakly on the
-# session so a stopped session's frames drop. This caches PLAN METADATA
+# A miss opens the file through ``read_parquet`` (footer schema read on the
+# driver, no Spark job); a hit costs zero py4j gateway roundtrips as well,
+# since the memo stores the immutable source DataFrame itself. Keyed on
+# (realpath, mtime_ns, size) so a rewritten fixture re-reads, and weakly on
+# the session so a stopped session's frames drop. This caches PLAN METADATA
 # only (an unexecuted scan relation, never rows) — every query still
 # computes from the parquet inputs.
-import weakref
-
 _READ_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _parquet_with_schema_memo(spark: SparkSession, path: str) -> DataFrame:
-    import os
-
     try:
         st = os.stat(path)
         key = (os.path.realpath(path), st.st_mtime_ns, st.st_size)
@@ -79,7 +112,7 @@ def _parquet_with_schema_memo(spark: SparkSession, path: str) -> DataFrame:
     per_session = _READ_MEMO.setdefault(spark, {})
     df = per_session.get(key)
     if df is None:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         per_session[key] = df
     return df
 

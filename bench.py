@@ -7,9 +7,10 @@ sized to fit the driver's 2000-char stdout tail; the FULL record
 (queries_median, every sf1 wall, storage_scaling rows) lands in
 docs/BENCH_DETAIL.json on each run.
 
-Each query is fully materialized (count + a cheap checksum collect) so
-lazy plans can't fake speed. A warmup pass primes the JVM/parquet footer
-caches; timed runs measure steady-state execution.
+Each query is fully materialized to Spark's ``noop`` sink, which computes
+every output column and writes nothing, so Catalyst cannot prune projected
+work the way a ``count()`` lets it. A warmup pass primes the JVM/parquet
+footer caches; timed runs measure steady-state execution.
 
 Contention calibration: round-over-round comparisons of wall times run on
 a SHARED host are at the mercy of co-tenant load (round 4's driver run
@@ -164,11 +165,11 @@ def _sf1_measure(spark, names: list[str], sf1: str) -> dict:
     for name in names:
         fn = QUERIES[name].fn
         for _ in range(2):
-            fn(spark, sf1).count()  # warmups, untimed
+            materialize(fn(spark, sf1))  # warmups, untimed
         runs = []
         for _ in range(3):
             t0 = time.perf_counter()
-            fn(spark, sf1).count()
+            materialize(fn(spark, sf1))
             runs.append(time.perf_counter() - t0)
         out[name] = round(min(runs), 3)
         med[name] = round(statistics.median(runs), 3)
@@ -623,11 +624,14 @@ def _storage_scaling_cell(spark, P: int) -> dict:
 
 
 
+def materialize(df) -> None:
+    """Compute every row and column of ``df`` into the noop sink."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def run_one(spark, fn) -> float:
     t0 = time.perf_counter()
-    df = fn(spark, SF_DIR)
-    n = df.count()
-    assert n >= 0
+    materialize(fn(spark, SF_DIR))
     return time.perf_counter() - t0
 
 
@@ -683,7 +687,7 @@ def main() -> None:
     calibration(spark)
     for _ in range(2):
         for name in names:
-            QUERIES[name].fn(spark, SF_DIR).count()
+            materialize(QUERIES[name].fn(spark, SF_DIR))
 
     # steady state: 3 runs per query; report min (capability) AND median
     # (variance). Calibration probes interleave with the suite so they

@@ -559,23 +559,20 @@ def _view(df):
     return df.dtypes, sorted(tuple(r) for r in df.collect())
 
 
-def _history_views(t, as_of, base=True):
-    views = {
+def _history_views(t, as_of):
+    return {
         "as_of": _view(t.read(as_of=as_of)),
         "incremental": _view(t.read_incremental(0)),
+        "read": _view(t.read()),
+        "read_optimized": _view(t.read_optimized()),
     }
-    if base:
-        views["read"] = _view(t.read())
-        views["read_optimized"] = _view(t.read_optimized())
-    return views
 
 
-def _assert_recorded_matches_inferred(spark, tmp_path, batches, base_after_compaction=True):
+def _assert_recorded_matches_inferred(spark, tmp_path, batches):
     """Commit ``batches``, then read, compact and pull incrementally twice:
     with the recorded delta schemas, and on a copy whose markers carry
     none (every delta's schema inferred from its footer). Both must see
-    the same columns, types and rows. ``base_after_compaction=False``
-    skips the base reads after the compaction."""
+    the same columns, types and rows."""
     import shutil
 
     def mk(path):
@@ -595,9 +592,7 @@ def _assert_recorded_matches_inferred(spark, tmp_path, batches, base_after_compa
     assert _history_views(rec, as_of) == _history_views(inf, as_of)
     assert rec.compact() == inf.compact() == len(batches) - 1
     # as_of now predates the compaction: a replay of the log alone
-    assert _history_views(rec, as_of, base_after_compaction) == _history_views(
-        inf, as_of, base_after_compaction
-    )
+    assert _history_views(rec, as_of) == _history_views(inf, as_of)
     return rec
 
 
@@ -625,18 +620,15 @@ def test_recorded_schema_delta_adds_a_column(spark, tmp_path):
 
 def test_recorded_schema_delta_widens_a_type(spark, tmp_path):
     """The delta is read in its own (wider) type and the merge widens
-    the base. The base is not read after the compaction: the persisted
-    table schema keeps the first type of a column, which the compacted
-    base no longer has, with or without recorded schemas."""
+    the base; the persisted table schema takes the wider type, so the
+    compacted base reads back too."""
     schema = "k long, part string, v {}, ver long"
     batches = [
         spark.createDataFrame([(1, "a", 1, 1), (2, "b", 2, 1)], schema.format("int")),
         spark.createDataFrame([(1, "a", 2**40, 2)], schema.format("bigint")),
         spark.createDataFrame([(2, "b", 3, 2)], schema.format("int")),
     ]
-    rec = _assert_recorded_matches_inferred(
-        spark, tmp_path, batches, base_after_compaction=False
-    )
+    rec = _assert_recorded_matches_inferred(spark, tmp_path, batches)
     assert rec._delta_schema(2)["v"].dataType.typeName() == "long"
     assert {(r.k, r.v) for r in rec.read_incremental(1).collect()} == {(1, 2**40), (2, 3)}
 
@@ -665,3 +657,98 @@ def test_recorded_schema_reads_start_no_spark_job(spark, tmp_path):
     assert jobs(group) == 0
     _forget_recorded_schemas(t.path)
     assert jobs(group + "-inferred") == 2
+
+
+# -- type widening across compaction --------------------------------------
+
+@pytest.mark.parametrize("partition_by", [["s"], []], ids=["partitioned", "unpartitioned"])
+def test_widened_type_survives_compaction(spark, tmp_path, partition_by):
+    """INT rows, then a BIGINT row for the same key: the persisted type
+    widens to BIGINT, the untouched INT base partition reads as BIGINT
+    until the compaction rewrites it, and the compacted base reads back.
+    The first type was kept before, and every read after the compaction
+    failed with PARQUET_COLUMN_DATA_TYPE_MISMATCH."""
+    t = MergeOnReadTable(
+        spark=spark, path=str(tmp_path / "w"), keys=["k"], precombine="v",
+        partition_by=partition_by, policy=CompactionPolicy(max_delta_commits=100),
+    )
+    t.upsert(spark.createDataFrame([(1, "a", 1), (2, "b", 2)], "k int, s string, v int"))
+    t.upsert(spark.createDataFrame([(1, "a", 2**40)], "k int, s string, v bigint"))
+    want = {(1, "a", 2**40), (2, "b", 2)}
+    assert {(r.k, r.s, r.v) for r in t.read().collect()} == want
+    assert t.compact() == 1
+    for df in (t.read(), t.read_optimized()):
+        assert dict(df.dtypes)["v"] == "bigint"
+        assert {(r.k, r.s, r.v) for r in df.collect()} == want
+    t.upsert(spark.createDataFrame([(2, "b", 3)], "k int, s string, v int"))
+    assert t.compact() == 1
+    assert {(r.k, r.v) for r in t.read().collect()} == {(1, 2**40), (2, 3)}
+
+
+def test_widening_to_string_rewrites_every_base_partition(spark, tmp_path):
+    """INT then STRING, a widening the parquet reader cannot apply to
+    INT32 files: the untouched base partition is read in its own type and
+    cast until the compaction, which rewrites every base partition; a
+    restore below that compaction writes the table's type too."""
+    t = MergeOnReadTable(
+        spark=spark, path=str(tmp_path / "w"), keys=["k"], precombine="ver",
+        partition_by=["part"], policy=CompactionPolicy(max_delta_commits=100),
+    )
+    schema = "k long, part string, v {}, ver long"
+    t.upsert(spark.createDataFrame([(1, "a", 1, 1), (2, "b", 2, 1)], schema.format("int")))
+    t.savepoint(1)
+    t.upsert(spark.createDataFrame([(1, "a", "x", 2)], schema.format("string")))
+    want = {(1, "x"), (2, "2")}
+    assert {(r.k, r.v) for r in t.read().collect()} == want
+    assert {(r.k, r.v) for r in t.read_optimized().collect()} == {(1, "1"), (2, "2")}
+    assert t.compact() == 1
+    assert "base_types" not in t._meta()
+    for df in (t.read(), t.read_optimized()):
+        assert dict(df.dtypes)["v"] == "string"
+        assert {(r.k, r.v) for r in df.collect()} == want
+    written = spark.read.parquet(os.path.join(t.path, "base", "part=b"))
+    assert dict(written.dtypes)["v"] == "string"
+    t.restore(1)
+    assert {(r.k, r.v) for r in t.read().collect()} == {(1, "1"), (2, "2")}
+    assert dict(t.read_optimized().dtypes)["v"] == "string"
+
+
+# -- no pending delta: the base is the state ------------------------------
+
+def _has_aggregate(df) -> bool:
+    return "Aggregate" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+@pytest.mark.parametrize("merge_mode", ["overwrite", "partial"])
+@pytest.mark.parametrize("partition_by", [["part"], []], ids=["partitioned", "unpartitioned"])
+def test_compacted_read_is_the_base_scan(spark, tmp_path, partition_by, merge_mode):
+    """With no delta pending, read() (and read(as_of) at or after the
+    compaction point) is the base scan: no Aggregate in its plan, and the
+    same columns and rows as the keyed merge over the base alone."""
+    from aws_glue_streaming_etl_with_apache_hudi_spark.operators.mor import _SEQ
+    from aws_glue_streaming_etl_with_apache_hudi_spark.operators.upsert import partial_combine, precombine_latest
+
+    t = MergeOnReadTable(
+        spark=spark, path=str(tmp_path / "c"), keys=["k"], precombine="ver",
+        partition_by=partition_by, policy=CompactionPolicy(max_delta_commits=100),
+        merge_mode=merge_mode,
+    )
+    t.upsert(_rows(spark, [(1, "a", "x", 1), (2, "a", "y", 1), (3, "b", "z", 1)]))
+    t.upsert(spark.createDataFrame([(1, "a", "x2", 2), (4, "b", None, 1)], "k long, part string, v string, ver long"))
+    if merge_mode == "overwrite":
+        marked = "k long, part string, v string, ver long, _hoodie_is_deleted boolean"
+        t.upsert(spark.createDataFrame([(2, "a", None, 2, True)], marked))
+    assert t.compact() >= 1 and not t.pending_commits()
+
+    base = t._read_base().withColumn(_SEQ, F.lit(0))
+    if merge_mode == "partial":
+        merged = partial_combine(base, t._identity, "ver", tie_breakers=[_SEQ])
+    else:
+        merged = precombine_latest(base, t._identity, "ver", tie_breakers=[_SEQ]).drop(_SEQ)
+    assert _has_aggregate(merged)
+    for df in (t.read(), t.read(as_of=t._compacted_through())):
+        assert not _has_aggregate(df)
+        assert df.dtypes == merged.dtypes
+        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, merged.collect()))
+    want = {1: "x2", 3: "z", 4: None} if merge_mode == "overwrite" else {1: "x2", 2: "y", 3: "z", 4: None}
+    assert {r.k: r.v for r in t.read().collect()} == want

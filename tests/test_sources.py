@@ -113,3 +113,117 @@ def test_orc_round_trip_with_pushdown(spark, sf_dir, tmp_path):
 
     pruned = back.filter(F.col("o_orderstatus") == "F").select("o_orderkey")
     assert has_pushed_filter(pruned, "o_orderstatus")
+
+
+# -- opening parquet from footer metadata --------------------------------
+
+def _jobs(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` starts, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _fresh_fixture_dir(sf_dir: str, dest) -> str:
+    """The fixture tables under a new path (hard links where the file
+    system allows), so every load misses the reader memo."""
+    import os
+    import shutil
+
+    dest.mkdir()
+    for name in R.FIXTURE_TABLES:
+        src, dst = f"{sf_dir}/{name}.parquet", str(dest / f"{name}.parquet")
+        try:
+            os.link(src, dst)
+        except OSError:
+            shutil.copyfile(src, dst)
+    return str(dest)
+
+
+def test_load_table_starts_no_spark_job(spark, sf_dir, tmp_path):
+    """Opening a table reads its footer on the driver: ten fresh fixture
+    tables open with zero Spark jobs, where schema inference starts one
+    job a table (the control, which shows the counter sees jobs)."""
+    import os
+
+    fresh = _fresh_fixture_dir(sf_dir, tmp_path / "fixtures")
+    group = f"load-table-{os.getpid()}-{abs(hash(str(tmp_path)))}"
+    n = _jobs(spark, group, lambda: [R.load_table(spark, fresh, t).schema for t in R.FIXTURE_TABLES])
+    assert n == 0, n
+    control = _jobs(spark, group + "-control", lambda: spark.read.parquet(f"{fresh}/nation.parquet").schema)
+    assert control >= 1, control
+
+
+def test_footer_schema_matches_inference_on_fixtures(spark, sf_dir, tmp_path):
+    """The driver's footer schema is the schema Spark infers, for every
+    fixture table with nanosAsLong on (as ``load_table`` sets it for
+    ``events``), and for a TIMESTAMP(NANOS) column, which that flag
+    reads as long."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    nanos = str(tmp_path / "nanos.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1, 2_000_000_001], pa.timestamp("ns"))}), nanos)
+    for p in [f"{sf_dir}/{name}.parquet" for name in R.FIXTURE_TABLES] + [nanos]:
+        inferred = spark.read.parquet(p).schema
+        assert R._footer_schema(spark, p) == inferred, p
+        assert R.read_parquet(spark, p).schema == inferred, p
+    assert R._footer_schema(spark, nanos)["ts"].dataType == T.LongType()
+
+
+def test_footer_schema_matches_inference_on_nested_types(spark, tmp_path):
+    """A Spark-written file with TIMESTAMP_NTZ, DECIMAL(38,x), array and
+    struct columns: Spark's footer schema metadata round-trips through
+    the driver read as it does through inference."""
+    import glob
+
+    out = str(tmp_path / "typed")
+    spark.sql(
+        """SELECT TIMESTAMP_NTZ'2024-01-02 03:04:05.123456' AS ntz,
+                  CAST('12345678901234567890.123456' AS DECIMAL(38,6)) AS d38,
+                  CAST(1.5 AS DECIMAL(38,0)) AS d0,
+                  array(1, 2, 3) AS arr,
+                  named_struct('a', 1L, 'b', array('x'), 'c', named_struct('t', TIMESTAMP'2024-01-01 00:00:00')) AS st,
+                  map('k', 1.5D) AS m"""
+    ).coalesce(1).write.parquet(out)
+    (p,) = glob.glob(f"{out}/part-*.parquet")
+    inferred = spark.read.parquet(p).schema
+    assert R._footer_schema(spark, p) == inferred
+    assert R.read_parquet(spark, p).collect() == spark.read.parquet(p).collect()
+
+
+def test_directory_takes_inference_fallback(spark, tmp_path):
+    """A directory has no single footer: it is inferred by Spark."""
+    out = str(tmp_path / "dir")
+    spark.range(3).selectExpr("id", "CAST(id AS STRING) AS s").write.parquet(out)
+    assert R._footer_schema(spark, out) is None
+    df = R.read_parquet(spark, out)
+    assert df.schema == spark.read.parquet(out).schema
+    assert sorted(r.id for r in df.collect()) == [0, 1, 2]
+
+
+def test_non_parquet_file_raises_spark_error(spark, tmp_path):
+    """A file that is not parquet fails the driver read and falls back
+    to inference, so the caller sees the error Spark itself raises."""
+    import pytest
+
+    p = tmp_path / "bad.parquet"
+    p.write_text("not a parquet file\n" * 4)
+    assert R._footer_schema(spark, str(p)) is None
+    with pytest.raises(Exception) as direct:
+        spark.read.parquet(str(p)).schema
+    with pytest.raises(type(direct.value)) as via:
+        R.read_parquet(spark, str(p)).schema
+
+    def root_cause(e):
+        j = e.java_exception
+        while j.getCause() is not None:
+            j = j.getCause()
+        return j.getClass().getName(), j.getMessage()
+
+    assert root_cause(via.value) == root_cause(direct.value)
