@@ -361,7 +361,10 @@ class MergeOnReadTable(SnapshotSidecars):
             )
             self._save_meta(
                 {
-                    "schema": batch.schema.json(),
+                    # `_deleted` stays delta-internal, as in _evolve_meta
+                    "schema": T.StructType(
+                        [f for f in batch.schema.fields if f.name != _DELETED]
+                    ).json(),
                     "keys": self.keys,
                     "precombine": self.precombine,
                     "partition_by": self.partition_by,
@@ -877,8 +880,10 @@ class MergeOnReadTable(SnapshotSidecars):
             # Bootstrap, compaction and restore all write merged output,
             # so the base holds one tombstone-free row per identity: with
             # no delta pending it IS the state, and the keyed aggregation
-            # would only shuffle it. Columns keep the merged read's order.
-            base = base.drop(_SEQ)
+            # would only shuffle it. Columns keep the merged read's order;
+            # a meta schema saved by an older bootstrap may still list
+            # `_deleted`, which the base reads as all-null and is dropped.
+            base = _drop_tombstone_winners(base.drop(_SEQ))
             if self.merge_mode == "partial":
                 base = base.select(*self._identity, *[c for c in base.columns if c not in self._identity])
             return base

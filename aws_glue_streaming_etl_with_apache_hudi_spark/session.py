@@ -28,10 +28,7 @@ def default_driver_memory() -> str:
     host's physical memory, capped at 48g, so the heap never outgrows the
     host it runs on (48g on a 16 GB host let a long test session's JVM
     grow until a second one beside it died)."""
-    try:
-        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    except (ValueError, OSError):  # no sysconf names on this platform
-        return "48g"
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{min(48 << 10, total >> 21)}m"
 
 

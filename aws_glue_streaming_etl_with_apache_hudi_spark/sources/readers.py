@@ -77,7 +77,7 @@ def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
             jvm.org.apache.parquet.hadoop.Footer(jpath, footer),
             parquet.ParquetToSparkSchemaConverter(state.conf()),
         ).asNullable().json()
-    except (Py4JError, TypeError):  # TypeError: a class missing from the JVM
+    except Py4JError:
         return None
     return T.StructType.fromJson(json.loads(schema))
 

@@ -520,9 +520,10 @@ def _storage_scaling_cell(spark, P: int) -> dict:
     # the O(touched) contract: listing+scanning 5 partitions must
     # not depend on how many others exist)
     t0 = time.perf_counter()
-    n = tbl.read_partitions([(p,) for p in pks]).count()
-    assert n >= _SS_TOUCH * 4
+    touched = tbl.read_partitions([(p,) for p in pks])
+    materialize(touched)
     res["read_touched_sec"] = round(time.perf_counter() - t0, 3)
+    assert touched.count() >= _SS_TOUCH * 4
 
     # delete_partition of a sacrificial partition (created untimed)
     sac = f"sac{run}"
@@ -588,9 +589,10 @@ def _storage_scaling_cell(spark, P: int) -> dict:
     ftbl.upsert(fb)
     res["fidx_commit_sec"] = round(time.perf_counter() - t0, 3)
     t0 = time.perf_counter()
-    n = ftbl.read(where="CAST(substring(pk, 5) AS INT) = 3").count()
+    probed = ftbl.read(where="CAST(substring(pk, 5) AS INT) = 3")
+    materialize(probed)
     res["fidx_read_expr_sec"] = round(time.perf_counter() - t0, 3)
-    assert n >= _SS_ROWS_PER_PART  # partition part…3's resident rows
+    assert probed.count() >= _SS_ROWS_PER_PART  # partition part…3's resident rows
 
     # MOR read amplification (VERDICT r9 task 4): the read-side
     # merge (base ∪ N deltas -> max_by) is bounded by the pending
@@ -601,7 +603,7 @@ def _storage_scaling_cell(spark, P: int) -> dict:
     if P == 400:
         def _read_wall():
             t0 = time.perf_counter()
-            mtbl.read().count()
+            materialize(mtbl.read())
             return round(time.perf_counter() - t0, 3)
 
         res["mor_read_0_deltas_sec"] = _read_wall()

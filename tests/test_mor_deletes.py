@@ -137,3 +137,35 @@ def test_mor_meta_schema_never_contains_deleted(spark, tmp_path):
     # schema-driven empty frame matches a normal read's column set
     empty = t2._read_base_partitions([("zzz",)])
     assert set(empty.columns) == set(t2.read().columns)
+
+
+def test_mor_bootstrap_with_marker_hides_deleted(spark, tmp_path):
+    """A first batch that carries the marker bootstraps the table: the
+    base scan that serves reads with no pending delta must not expose
+    `_deleted`, and neither may the persisted schema."""
+    import json as _json
+
+    t = _tbl(spark, tmp_path / "t", table_name="mor_boot_marker")
+    t.upsert(_marked(spark, [(1, "a", 1, "x", False), (2, "a", 1, None, True)]))
+    stored = {f["name"] for f in _json.loads(t._meta()["schema"])["fields"]}
+    assert "_deleted" not in stored
+    assert "_deleted" not in t.read().columns
+    assert "_deleted" not in t.read(as_of=1).columns
+    assert "_deleted" not in spark.table("mor_boot_marker").columns
+    assert _state(t) == [(1, "a", 1, "x")]
+
+
+def test_mor_base_scan_drops_deleted_from_older_meta(spark, tmp_path):
+    """A meta schema saved before bootstrap stripped `_deleted` still
+    lists it; the no-delta base scan reads it as all-null and drops it."""
+    import json as _json
+
+    t = _tbl(spark, tmp_path / "t")
+    t.upsert(_marked(spark, [(1, "a", 1, "x", False)]))
+    meta = t._meta()
+    fields = _json.loads(meta["schema"])["fields"]
+    fields.append({"name": "_deleted", "type": "boolean", "nullable": True, "metadata": {}})
+    meta["schema"] = _json.dumps({"type": "struct", "fields": fields})
+    t._save_meta(meta)
+    assert "_deleted" not in t.read().columns
+    assert _state(t) == [(1, "a", 1, "x")]

@@ -24,10 +24,3 @@ def test_driver_memory_is_capped_at_48g(monkeypatch):
     _host(monkeypatch, 256 << 30)
     assert session.default_driver_memory() == "49152m"
 
-
-def test_driver_memory_without_sysconf(monkeypatch):
-    def missing(name):
-        raise ValueError(name)
-
-    monkeypatch.setattr(os, "sysconf", missing)
-    assert session.default_driver_memory() == "48g"
