@@ -262,12 +262,14 @@ def word_shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -
     must still produce a non-empty shingle set or it would get an empty
     MinHash signature and silently fall out of dedup entirely; two
     identical short docs still collide via their full-text shingle."""
-    words = f"split(lower({text_col}), '\\\\s+')"
+    # the word array is projected once and the lambda reads the column:
+    # a lambda over split(lower(text)) would re-split per shingle
+    words = df.selectExpr(id_col, f"split(lower({text_col}), '\\\\s+') AS _words")
     grams = (
-        f"transform(sequence(1, greatest(size({words}) - {n - 1}, 1)),"
-        f" i -> concat_ws(' ', slice({words}, i, {n})))"
+        f"transform(sequence(1, greatest(size(_words) - {n - 1}, 1)),"
+        f" i -> concat_ws(' ', slice(_words, i, {n})))"
     )
-    return df.selectExpr(
+    return words.selectExpr(
         id_col,
         f"array_distinct(filter({grams}, g -> g != '')) AS sh_arr",
     )

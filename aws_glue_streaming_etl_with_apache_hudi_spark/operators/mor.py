@@ -25,12 +25,12 @@ module is that design, pure Spark:
   model, which COW's ``TimelineTable`` already follows.
 
 Read amplification is bounded by the policy: a reader merges at most
-``max_delta_commits`` deltas before a compaction folds them away.
+``max_delta_commits`` deltas before a compaction folds them away, and
+deltas that share a recorded schema are read as one scan.
 """
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import shutil
@@ -869,13 +869,57 @@ class MergeOnReadTable(SnapshotSidecars):
         return T.StructType.fromJson(json.loads(recorded)) if recorded else None
 
     def _read_delta(self, seq: int) -> DataFrame:
-        """Delta ``seq`` read with its recorded schema; a delta without
-        one has its schema inferred from its footer (one Spark job)."""
+        """Delta ``seq`` read alone, with its recorded schema; a delta
+        without one has its schema inferred from its footer (one Spark
+        job). ``_read_deltas`` falls back to this read."""
         schema = self._delta_schema(seq)
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(os.path.join(self._log, f"commit={seq}"))
 
+    def _read_deltas(self, seqs: list[int], seq_col: str) -> DataFrame:
+        """Deltas ``seqs`` as one frame, each row tagged with its commit
+        seq in ``seq_col``. Deltas whose markers record the same schema
+        are ONE relation over their ``commit=N`` directories: with
+        ``basePath`` at the log, ``commit`` is a partition column whose
+        value is the seq, so k pending deltas of one schema plan one scan
+        instead of a union of k. A relation opens at most Spark's
+        parallel-listing threshold of directories, so building the frame
+        lists files on the driver and starts no job. A delta with no
+        recorded schema (a legacy writer), or one whose rows carry a
+        ``commit`` column, is read alone. The groups unify in the order
+        of their first seq, giving the columns, types and column order
+        of a per-delta ``evolve_schema`` union."""
+        groups: dict = {}
+        for seq in sorted(seqs):
+            schema = self._delta_schema(seq)
+            if schema is None or "commit" in {n.lower() for n in schema.fieldNames()}:
+                groups[seq] = (None, [seq])  # read alone
+            else:
+                groups.setdefault(schema.json(), (schema, []))[1].append(seq)
+        listing = int(self.spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+        frames = []
+        for schema, group in groups.values():
+            if schema is None:
+                frames.append(self._read_delta(group[0]).withColumn(seq_col, F.lit(group[0])))
+                continue
+            reader = self.spark.read.schema(
+                T.StructType(schema.fields + [T.StructField("commit", T.IntegerType())])
+            ).option("basePath", self._log)
+            for i in range(0, len(group), listing):
+                dirs = [os.path.join(self._log, f"commit={s}") for s in group[i : i + listing]]
+                frames.append(reader.parquet(*dirs).withColumnRenamed("commit", seq_col))
+        merged = frames[0]
+        for frame in frames[1:]:
+            merged, frame = evolve_schema(merged, frame)
+            merged = merged.unionByName(frame)
+        return merged
+
     def _merge_logs(self, base: DataFrame | None, seqs: list[int]) -> DataFrame:
+        """``base`` (rows tagged seq 0, or None for a replay of the log
+        alone) merged with deltas ``seqs`` (``_read_deltas``): one keyed
+        aggregation, the greatest (precombine, commit seq) winning.
+        Serves every realtime read, the compaction merge and the
+        time-travel replay."""
         if base is not None and not seqs:
             # Bootstrap, compaction and restore all write merged output,
             # so the base holds one tombstone-free row per identity: with
@@ -887,14 +931,10 @@ class MergeOnReadTable(SnapshotSidecars):
             if self.merge_mode == "partial":
                 base = base.select(*self._identity, *[c for c in base.columns if c not in self._identity])
             return base
-        merged = base
-        for seq in seqs:
-            delta = self._read_delta(seq).withColumn(_SEQ, F.lit(seq))
-            if merged is None:
-                merged = delta
-            else:
-                merged, delta = evolve_schema(merged, delta)
-                merged = merged.unionByName(delta)
+        merged = self._read_deltas(seqs, _SEQ)
+        if base is not None:
+            base, merged = evolve_schema(base, merged)
+            merged = base.unionByName(merged)
         if self.merge_mode == "partial":
             # column-wise latest non-null across base + every delta,
             # ordered by (precombine, commit seq) — one aggregation
@@ -1000,14 +1040,9 @@ class MergeOnReadTable(SnapshotSidecars):
                 f"no delta commits in ({begin}, {end if end is not None else '∞'}] "
                 f"(on disk: {self._committed_on_disk()})"
             )
-        merged = None
-        for seq in commits:
-            d = self._read_delta(seq).withColumn("_commit_id", F.lit(seq))
-            merged = d if merged is None else merged.unionByName(
-                d, allowMissingColumns=True
-            )
         return precombine_latest(
-            merged, self._identity, self.precombine, tie_breakers=["_commit_id"]
+            self._read_deltas(commits, "_commit_id"),
+            self._identity, self.precombine, tie_breakers=["_commit_id"],
         )
 
 
@@ -1233,10 +1268,7 @@ class MergeOnReadTable(SnapshotSidecars):
 
         if self.partition_by:
             # touched partitions: distinct tuples across all pending deltas
-            logs = functools.reduce(
-                DataFrame.unionByName,
-                [self._read_delta(s).select(*self.partition_by) for s in commits],
-            )
+            logs = self._read_deltas(commits, _SEQ).select(*self.partition_by)
             touched = [tuple(r) for r in logs.distinct().collect()]
             if retyped:
                 # a column changed type since the base was written: every

@@ -39,6 +39,16 @@ def words(col: Column | str) -> Column:
     return F.split(F.lower(c), r"\s+")
 
 
+def with_words(col: Column | str, fn) -> Column:
+    """``fn(w)`` over the document's word array ``w``, split ONCE per
+    row. Catalyst does not hoist an outer expression out of a lambda
+    (``ArrayTransform`` is interpreted), so a ``transform`` whose body
+    reads ``words(col)`` re-splits the whole text for every element:
+    O(words²) a document. Here the array is the argument of a
+    one-element ``transform`` and ``fn`` reads it as a lambda variable."""
+    return F.transform(F.array(words(col)), fn)[0]
+
+
 def token_count_whitespace(col: Column | str) -> Column:
     return F.size(words(col)).cast("long")
 
@@ -209,15 +219,17 @@ def word_ngrams(col: Column | str, n: int = 2) -> Column:
     used elsewhere would emit the truncated remainder as a bogus gram —
     caught by code review; ``F.when`` guards instead). Pure array
     expressions inside codegen; no explode, no shuffle."""
-    w = words(col)
-    positions = F.sequence(F.lit(1), F.size(w) - (n - 1))
-    return F.when(
-        F.size(w) >= n,
-        F.filter(
-            F.transform(positions, lambda i: F.concat_ws(" ", F.slice(w, i, n))),
-            lambda g: g != "",
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    def grams(w: Column) -> Column:
+        positions = F.sequence(F.lit(1), F.size(w) - (n - 1))
+        return F.when(
+            F.size(w) >= n,
+            F.filter(
+                F.transform(positions, lambda i: F.concat_ws(" ", F.slice(w, i, n))),
+                lambda g: g != "",
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    return with_words(col, grams)
 
 
 def corpus_vocab(
@@ -248,12 +260,14 @@ def word_lines(col: Column | str, line_len: int = 8) -> Column:
     """Chunk a document into non-overlapping ``line_len``-word "lines"
     (the fixture corpus has no sentence punctuation, so fixed word
     windows stand in for lines/sentences). Row-local array expression."""
-    w = words(col)
-    starts = F.sequence(F.lit(1), F.greatest(F.size(w), F.lit(1)), F.lit(line_len))
-    return F.filter(
-        F.transform(starts, lambda i: F.concat_ws(" ", F.slice(w, i, line_len))),
-        lambda s: s != "",
-    )
+    def lines(w: Column) -> Column:
+        starts = F.sequence(F.lit(1), F.greatest(F.size(w), F.lit(1)), F.lit(line_len))
+        return F.filter(
+            F.transform(starts, lambda i: F.concat_ws(" ", F.slice(w, i, line_len))),
+            lambda s: s != "",
+        )
+
+    return with_words(col, lines)
 
 
 def boilerplate_line_ratio(
@@ -621,17 +635,20 @@ def chunk_words(
     if not 0 <= overlap < size:
         raise ValueError("need 0 <= overlap < size")
     stride = size - overlap
-    w = words(col)
-    starts = F.sequence(
-        F.lit(1), F.greatest(F.size(w) - overlap, F.lit(1)), F.lit(stride)
-    )
-    return F.filter(
-        F.transform(
-            starts,
-            lambda s: F.struct(
-                s.alias("start_word"),
-                F.concat_ws(" ", F.slice(w, s, size)).alias("chunk_text"),
+
+    def chunks(w: Column) -> Column:
+        starts = F.sequence(
+            F.lit(1), F.greatest(F.size(w) - overlap, F.lit(1)), F.lit(stride)
+        )
+        return F.filter(
+            F.transform(
+                starts,
+                lambda s: F.struct(
+                    s.alias("start_word"),
+                    F.concat_ws(" ", F.slice(w, s, size)).alias("chunk_text"),
+                ),
             ),
-        ),
-        lambda c: c["chunk_text"] != "",
-    )
+            lambda c: c["chunk_text"] != "",
+        )
+
+    return with_words(col, chunks)

@@ -736,14 +736,16 @@ def text_repetition(spark, sf_dir):
     the plan is the final presentation sort. This is the ideal quality-
     scoring shape: corpus-sized input, zero shuffle."""
     docs = t(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), r"\s+")
+    # the lambda reads the projected word array, split once per document
+    words = F.col("words")
     positions = F.sequence(F.lit(1), F.greatest(F.size(words) - 2, F.lit(1)))
     grams = F.filter(
         F.transform(positions, lambda i: F.concat_ws(" ", F.slice(words, i, 3))),
         lambda g: g != "",
     )
     return (
-        docs.select("doc_id", grams.alias("gs"))
+        docs.select("doc_id", F.split(F.lower(F.col("text")), r"\s+").alias("words"))
+        .select("doc_id", grams.alias("gs"))
         .select(
             "doc_id",
             F.size("gs").alias("total_grams"),
